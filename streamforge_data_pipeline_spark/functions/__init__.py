@@ -120,6 +120,16 @@ def zorder_key(a: Column, b: Column, bits: int = 16) -> Column:
     return z
 
 
+def conf_bytes(spark, key: str) -> int:
+    """A byte-size conf in bytes, parsed as Spark parses it
+    (``JavaUtils.byteStringAsBytes``): ``134217728``, ``128MB``, ``1g``
+    and ``64k`` are all legal spellings."""
+    return int(
+        spark.sparkContext._jvm.org.apache.spark.network.util.JavaUtils
+        .byteStringAsBytes(spark.conf.get(key))
+    )
+
+
 def fan_out(df):
     """Spread a narrow scan across the cluster before an explode-heavy
     map stage — scale-adaptively (r10, guide §2.4).
@@ -160,17 +170,7 @@ def fan_out(df):
     except Exception:  # pragma: no cover — probe is best-effort
         files = []
     if files:
-        try:
-            mpb = int(
-                sc._jvm.org.apache.spark.network.util.JavaUtils
-                .byteStringAsBytes(
-                    df.sparkSession.conf.get(
-                        "spark.sql.files.maxPartitionBytes", "128m"
-                    )
-                )
-            )
-        except Exception:  # pragma: no cover
-            mpb = 128 * 1024 * 1024
+        mpb = conf_bytes(df.sparkSession, "spark.sql.files.maxPartitionBytes")
         splits_upper = 0
         for f in files:
             path = f.removeprefix("file://").removeprefix("file:")

@@ -21,6 +21,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from streamforge_data_pipeline_spark.functions import conf_bytes
 from streamforge_data_pipeline_spark.operators.validate import split_valid, to_items, validate
 from streamforge_data_pipeline_spark.schemas import INTAKE_COLUMNS
 from streamforge_data_pipeline_spark.sources.csv_intake import (
@@ -30,6 +31,7 @@ from streamforge_data_pipeline_spark.sources.csv_intake import (
 )
 from streamforge_data_pipeline_spark.sources.error_report import write_error_report
 from streamforge_data_pipeline_spark.sources.store import TableStore
+from streamforge_data_pipeline_spark.streaming.drain_conf import local_bytes
 
 
 @dataclass
@@ -55,40 +57,26 @@ def run_upload(
     per-micro-batch commit semantics (CHUNK_COMMIT) live in the
     streaming path (streaming/ingest_stream.py).
     """
-    import os
-
     job_id = str(uuid.uuid4())
     # Scale-derived CSV split size (r11, guide §6): a single staged CSV
     # under maxPartitionBytes (the reference's flagship 50 MB upload)
     # scans as ONE split, so parse+validate ran on one core. Derive the
     # split size so the scan lands ~defaultParallelism tasks, floored
     # at 4 MB and capped at the session value — at production input
-    # sizes bytes/parallelism exceeds the cap and this is a no-op.
-    # Order semantics are unaffected: the dedup key is
-    # (file, row_id) and within one file equal-size splits keep offset
-    # order (csv_intake docstring); the conf is restored on exit.
-    total = 0
-    for root_dir, _dirs, files in os.walk(csv_path):
-        for f in files:
-            if not f.startswith(("_", ".")):
-                try:
-                    total += os.path.getsize(os.path.join(root_dir, f))
-                except OSError:
-                    pass
-    if os.path.isfile(csv_path):
-        total = os.path.getsize(csv_path)
-    old_mpb = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    import re as _re
-
-    old_bytes = int(_re.sub(r"[^0-9]", "", old_mpb) or 134217728)
-    if old_mpb.rstrip("b").lower().endswith("m"):
-        old_bytes *= 1024 * 1024
-    elif old_mpb.rstrip("b").lower().endswith("g"):
-        old_bytes *= 1024 * 1024 * 1024
-    p = spark.sparkContext.defaultParallelism
-    derived = max(4 * 1024 * 1024, min(old_bytes, (total or old_bytes) // p))
+    # sizes bytes/parallelism exceeds the cap and this is a no-op. An
+    # input whose size is unknown (a URI, nothing on the local disk)
+    # keeps the session value. Order semantics are unaffected: the
+    # dedup key is (file, row_id) and within one file equal-size splits
+    # keep offset order (csv_intake docstring); the conf is restored on
+    # exit.
+    mpb_key = "spark.sql.files.maxPartitionBytes"
+    old_mpb = spark.conf.get(mpb_key)
+    total = local_bytes(csv_path)
+    if total:
+        p = spark.sparkContext.defaultParallelism
+        derived = min(conf_bytes(spark, mpb_key), max(4 * 1024 * 1024, total // p))
+        spark.conf.set(mpb_key, str(derived))
     try:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", str(derived))
         raw = read_intake_csv(spark, csv_path)
         existing = store.existing_ids_or_empty(spark)
         validated = validate(raw, existing, intake_order()).cache()
@@ -113,7 +101,8 @@ def run_upload(
         failed = sum(by_error.values())
         validated.unpersist()
     finally:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", old_mpb)
+        if total:
+            spark.conf.set(mpb_key, old_mpb)
     return UploadResult(
         job_id=job_id,
         processed=inserted + failed,

@@ -17,6 +17,7 @@ Scale notes (local[32] here, 1000-executor cluster in production):
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import SparkSession
 
@@ -81,8 +82,58 @@ _NANOS_TS_COLS: dict[str, tuple[str, ...]] = {
 }
 
 
+# Every SQL conf Spark's parquet schema converter reads while inferring
+# a file's schema: the same footer can infer differently under each.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.caseSensitive",
+)
+# (applicationId, absolute path) -> (file/conf stamp, inferred StructType)
+_SCHEMAS: dict[tuple[str, str], tuple[tuple, object]] = {}
+
+
+def _parquet_schema(spark: SparkSession, path: str):
+    """The schema ``spark.read.parquet(path)`` infers, inferred once per
+    session, file version and conf; None for a path that is not a local
+    regular file (a non-local URI, a directory of parts)."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    key = (spark.sparkContext.applicationId, os.path.abspath(path))
+    stamp = (
+        st.st_mtime_ns,
+        st.st_size,
+        st.st_ino,
+        tuple(spark.conf.get(k) for k in _SCHEMA_CONFS),
+    )
+    hit = _SCHEMAS.get(key)
+    if hit is None or hit[0] != stamp:
+        hit = _SCHEMAS[key] = (stamp, spark.read.parquet(path).schema)
+    return hit[1]
+
+
 def load(spark: SparkSession, sf_dir: str, table: str):
     """Read one driver-provided parquet table (TESTDATA.md).
+
+    Schema cache: ``spark.read.parquet(path)`` without a schema runs one
+    Spark job per call (the footer read, ``parquet at <unknown>:0``) to
+    infer it, and a registry key loads 2-5 tables. So the schema is
+    inferred once and later reads pass it with ``spark.read.schema``,
+    which runs no job. The cache key is the session
+    (``applicationId``), the absolute path, the file's modification
+    time, length and inode, and the values of ``_SCHEMA_CONFS``: a
+    rewritten file or a different conf infers again. A path that is
+    not a local regular file (a remote URI, a directory of parts) is
+    inferred on every read. The cache holds the ``StructType``, not
+    the DataFrame: every call builds a fresh relation with fresh
+    attribute ids, so a key that reads one table twice (a self-join)
+    still resolves unambiguously.
 
     No parallelism floor: each testdata table is ONE single-row-group
     parquet file, so it scans as one input split and pre-shuffle work
@@ -95,10 +146,16 @@ def load(spark: SparkSession, sf_dir: str, table: str):
     the question disappears.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{table}.parquet"))
+    path = os.path.join(sf_dir, f"{table}.parquet")
+    schema = _parquet_schema(spark, path)
+    if schema is None:
+        df = spark.read.parquet(path)
+        schema = df.schema
+    else:
+        df = spark.read.schema(schema).parquet(path)
     from pyspark.sql import functions as F, types as T
 
     for c in _NANOS_TS_COLS.get(table, ()):
-        if isinstance(df.schema[c].dataType, T.LongType):
+        if isinstance(schema[c].dataType, T.LongType):
             df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` DIV 1000")))
     return df

@@ -50,7 +50,12 @@ from pyspark.sql import DataFrame, SparkSession
 TARGET_BYTES_PER_PARTITION = 64 * 1024 * 1024
 
 
-def _dir_bytes(path: str) -> int:
+def local_bytes(path: str) -> int:
+    """Bytes of a local file, or of the data files under a local
+    directory (``_``/``.``-prefixed names skipped); 0 for anything the
+    local disk does not hold, such as a URI."""
+    if os.path.isfile(path):
+        return os.path.getsize(path)
     total = 0
     for root, _dirs, files in os.walk(path):
         for f in files:
@@ -71,11 +76,7 @@ def input_bytes(*sources: "str | DataFrame") -> int:
     total = 0
     for src in sources:
         if isinstance(src, str):
-            p = src.removeprefix("file://").removeprefix("file:")
-            if os.path.isdir(p):
-                total += _dir_bytes(p)
-            elif os.path.isfile(p):
-                total += os.path.getsize(p)
+            total += local_bytes(src.removeprefix("file://").removeprefix("file:"))
         else:  # DataFrame
             try:
                 files = src.inputFiles()

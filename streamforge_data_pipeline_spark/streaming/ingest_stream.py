@@ -77,10 +77,14 @@ def start_stream_ingest(
     if available_now:
         writer = writer.trigger(availableNow=True)
     query = writer.start()
-    status.put(job_id, Status("PROCESSING", query.id.__str__()))
+    # carries the running count: a batch may commit before start() returns
+    status.put(job_id, Status("PROCESSING", str(query.id), processed["rows"]))
     return query
 
 
 def finish(query: StreamingQuery, status: StatusStore, job_id: str) -> None:
+    """Wait for the drain, then report JOB_COMPLETE with the rows it
+    processed, as the reference's completion Status does."""
     query.awaitTermination()
-    status.put(job_id, Status("JOB_COMPLETE"))
+    done = status.get(job_id).processed_rows
+    status.put(job_id, Status("JOB_COMPLETE", processed_rows=done))

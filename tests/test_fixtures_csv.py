@@ -133,3 +133,54 @@ def test_reupload_is_idempotent(spark, csv_path, tmp_path):
     # id uniqueness must hold across appended uploads too
     items = store.read(spark, "items")
     assert items.select("id").distinct().count() == items.count()
+
+
+MPB = "spark.sql.files.maxPartitionBytes"
+
+
+def _upload_seeing_split_size(spark, monkeypatch, path, tmp_path):
+    """run_upload, returning the maxPartitionBytes its CSV scan planned with."""
+    from streamforge_data_pipeline_spark.plans import ingest
+
+    seen = []
+
+    def spy(spark_, csv_path):
+        seen.append(spark_.conf.get(MPB))
+        return read(spark_, csv_path)
+
+    read = ingest.read_intake_csv
+    monkeypatch.setattr(ingest, "read_intake_csv", spy)
+    res = run_upload(spark, path, TableStore(str(tmp_path / "store")))
+    assert res.processed == 12
+    (value,) = seen
+    return value
+
+
+@pytest.mark.parametrize(
+    "spelling, nbytes", [("128MB", 128 << 20), ("1g", 1 << 30), ("64k", 64 << 10)]
+)
+def test_upload_split_size_reads_every_byte_spelling(
+    spark, monkeypatch, csv_path, tmp_path, spelling, nbytes
+):
+    from streamforge_data_pipeline_spark.functions import conf_bytes
+
+    old = spark.conf.get(MPB)
+    try:
+        spark.conf.set(MPB, spelling)
+        assert conf_bytes(spark, MPB) == nbytes
+        # a tiny file: 4 MB floor, capped at the session value
+        want = min(nbytes, 4 << 20)
+        assert _upload_seeing_split_size(spark, monkeypatch, csv_path, tmp_path) == str(want)
+        assert spark.conf.get(MPB) == spelling  # restored
+    finally:
+        spark.conf.set(MPB, old)
+
+
+def test_upload_of_unsized_uri_keeps_session_split_size(
+    spark, monkeypatch, csv_path, tmp_path
+):
+    # the local disk cannot size a URI: the session value stays as it is
+    old = spark.conf.get(MPB)
+    seen = _upload_seeing_split_size(spark, monkeypatch, f"file://{csv_path}", tmp_path)
+    assert seen == old
+    assert spark.conf.get(MPB) == old

@@ -43,6 +43,7 @@ def test_stream_ingest_commits_batches_and_tracks_status(spark, tmp_path):
     finish(q, status, "job-1")
 
     assert status.get("job-1").step == "JOB_COMPLETE"
+    assert status.get("job-1").processed_rows == 4  # both files' data rows
     assert status.get("unknown").step == "NOT_FOUND"
 
     items = store.read(spark, "items")

@@ -68,3 +68,19 @@ def compare(spark_df, con, sql: str) -> tuple[bool, str]:
         diff = [(a, b) for a, b in zip(sc, dc) if a != b][:3]
         return False, f"values differ, first diffs: {diff}"
     return True, "ok"
+
+
+def count_jobs(spark, fn) -> int:
+    """Spark jobs ``fn()`` runs on this thread, counted under a fresh
+    job group once the listener bus has caught up."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4()}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
