@@ -156,7 +156,8 @@ def fan_out(df):
     the scan is narrow and firing is safe, while at production file
     counts the bound exceeds parallelism and the call is a structural
     no-op). Only when the frame exposes no input files (in-memory
-    relations, post-shuffle frames) does the probe fall back to
+    relations, post-shuffle frames) or a file's size cannot be read
+    (a non-local URI) does the probe fall back to
     ``df.rdd.getNumPartitions()`` — which on a frame with upstream
     shuffles EXECUTES those stages under AQE, the misuse the contract
     exists to prevent.
@@ -172,16 +173,15 @@ def fan_out(df):
     if files:
         mpb = conf_bytes(df.sparkSession, "spark.sql.files.maxPartitionBytes")
         splits_upper = 0
-        for f in files:
-            path = f.removeprefix("file://").removeprefix("file:")
-            try:
-                size = os.path.getsize(path)
-            except OSError:
-                return df  # non-local / unreadable: assume wide enough
-            splits_upper += max(1, -(-size // mpb))
-            if splits_upper >= p:
-                return df
-        return df.repartition(p)
+        try:
+            for f in files:
+                path = f.removeprefix("file://").removeprefix("file:")
+                splits_upper += max(1, -(-os.path.getsize(path) // mpb))
+                if splits_upper >= p:
+                    return df
+            return df.repartition(p)
+        except OSError:
+            pass  # non-local / unreadable file: ask the scan instead
     if df.rdd.getNumPartitions() < p:
         return df.repartition(p)
     return df

@@ -18,7 +18,10 @@ baselines.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 from dataclasses import dataclass
 from typing import Callable
 
@@ -54,9 +57,11 @@ from streamforge_data_pipeline_spark.operators.validate import split_valid
 from streamforge_data_pipeline_spark.plans import analytics, behavior
 from streamforge_data_pipeline_spark.plans.intake import INTAKE_CTES, intake, validated_intake
 from streamforge_data_pipeline_spark.streaming.drain_conf import (
+    drain_to_memory,
     scaled_drain_conf,
 )
 from streamforge_data_pipeline_spark.session import load
+from streamforge_data_pipeline_spark.sources.store import TableStore
 from streamforge_data_pipeline_spark.sources.datagen import generate_intake
 from streamforge_data_pipeline_spark.sources.error_report import error_report
 from streamforge_data_pipeline_spark.schemas import INTAKE_COLUMNS
@@ -420,12 +425,38 @@ cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
 
 
 # ---------------------------------------------------------------------------
-# CSV round-trip staging (S1/S2): deterministic CSV written once per
-# sf_dir, then scanned back — exercises the real csv source against a
-# parquet-backed oracle. Lossless columns only (bigint + token string).
+# Stage-once inputs: tables derived from an sf_dir, written once per
+# process and sf_dir (_stage_once), then read by the streaming drains
+# and the CSV round-trip keys (S1/S2: deterministic CSV scanned back —
+# exercises the real csv source against a parquet-backed oracle;
+# lossless columns only, bigint + token string).
 # ---------------------------------------------------------------------------
 
-_EVENTS_STAGE: dict[str, str] = {}
+# Prefix of every _stage_once directory: they live until interpreter
+# exit, unlike a drain's scratch dir.
+STAGE_PREFIX = "sfdp_stage_"
+_STAGED: dict[tuple[str, str], str] = {}
+
+
+def _stage_once(sf_dir: str, name: str, write: Callable[[str], None]) -> str:
+    """Path of the ``name`` table staged from ``sf_dir``: ``write(path)``
+    produces it on the first call per process and sf_dir, in a temp dir
+    of its own (prefix ``STAGE_PREFIX``) that is removed at interpreter
+    exit; later calls return the same path without a Spark job."""
+    key = (os.path.abspath(sf_dir), name)
+    path = _STAGED.get(key)
+    if path and os.path.isdir(path):
+        return path
+    work = tempfile.mkdtemp(prefix=STAGE_PREFIX)
+    path = os.path.join(work, name)
+    try:
+        write(path)
+    except BaseException:
+        shutil.rmtree(work, ignore_errors=True)
+        raise
+    atexit.register(shutil.rmtree, work, ignore_errors=True)
+    _STAGED[key] = path
+    return path
 
 
 def _staged_events(spark: SparkSession, sf_dir: str) -> str:
@@ -440,48 +471,39 @@ def _staged_events(spark: SparkSession, sf_dir: str) -> str:
     TOKS_CTE staging follows the same stage-once discipline. Consumers
     select their column subset from the stream — parquet column
     pruning applies, so narrower keys read only their columns."""
-    tag = os.path.abspath(sf_dir)
-    path = _EVENTS_STAGE.get(tag)
-    if path and os.path.isdir(path):
-        return path
-    import atexit
-    import shutil
-    import tempfile
 
-    work = tempfile.mkdtemp(prefix="sfdp_evstage_")
-    path = os.path.join(work, "events")
-    # fan_out (r10.14): the source arrives as ONE split at bench SFs,
-    # so the staging write was a single task — and the staged table a
-    # single FILE, serializing every downstream stream scan. Identical
-    # rows, now written (and later stream-read) with cluster-wide
-    # parallelism; no-op once the source has >= defaultParallelism
-    # splits. RANGE-partitioned by ts, not round-robin (r10 ADVICE #2):
-    # round-robin interleaved timestamps arbitrarily across the staged
-    # files, so any future consumer with a small maxFilesPerTrigger
-    # would see ts-uncorrelated micro-batches and its watermark could
-    # drop late-arriving keys nondeterministically; per-file time
-    # locality keeps multi-batch drains ts-ordered. Current consumers
-    # drain in ONE batch, so rows and results are unchanged either way.
-    ev = load(spark, sf_dir, "events").select(
-        "event_id", "ts", "user_id", "event_type", "value", "props"
-    )
-    p = spark.sparkContext.defaultParallelism
-    if len(ev.inputFiles()) < p:
-        ev = ev.repartitionByRange(p, "ts")
-    ev.write.mode("overwrite").parquet(path)
-    _EVENTS_STAGE[tag] = path
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-    return path
+    def write(path):
+        # fan_out (r10.14): the source arrives as ONE split at bench SFs,
+        # so the staging write was a single task — and the staged table a
+        # single FILE, serializing every downstream stream scan. Identical
+        # rows, now written (and later stream-read) with cluster-wide
+        # parallelism; no-op once the source has >= defaultParallelism
+        # splits. RANGE-partitioned by ts, not round-robin (r10 ADVICE #2):
+        # round-robin interleaved timestamps arbitrarily across the staged
+        # files, so any future consumer with a small maxFilesPerTrigger
+        # would see ts-uncorrelated micro-batches and its watermark could
+        # drop late-arriving keys nondeterministically; per-file time
+        # locality keeps multi-batch drains ts-ordered. Current consumers
+        # drain in ONE batch, so rows and results are unchanged either way.
+        ev = load(spark, sf_dir, "events").select(
+            "event_id", "ts", "user_id", "event_type", "value", "props"
+        )
+        p = spark.sparkContext.defaultParallelism
+        if len(ev.inputFiles()) < p:
+            ev = ev.repartitionByRange(p, "ts")
+        ev.write.mode("overwrite").parquet(path)
+
+    return _stage_once(sf_dir, "events", write)
 
 
 def _csv_stage(spark: SparkSession, sf_dir: str, sub: str, single_file: bool) -> str:
-    tag = sf_dir.strip("/").replace("/", "_")
-    path = f"/tmp/streamforge_spark/{tag}/{sub}"
-    df = load(spark, sf_dir, "events").select("event_id", "event_type")
-    if single_file:
-        df = df.repartition(1)
-    df.write.mode("overwrite").option("header", True).csv(path)
-    return path
+    def write(path):
+        df = load(spark, sf_dir, "events").select("event_id", "event_type")
+        if single_file:
+            df = df.repartition(1)
+        df.write.mode("overwrite").option("header", True).csv(path)
+
+    return _stage_once(sf_dir, sub, write)
 
 
 def q_csv_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -822,11 +844,6 @@ def q_ann_ivf_indexed(spark, sf_dir):
     opens only the probed cells' directories (plan-asserted in
     tests/test_ivf_partitioned.py). Shares ann_ivf_seeded's oracle
     verbatim: same answer, two physical paths."""
-    import shutil
-    import tempfile
-
-    from streamforge_data_pipeline_spark.sources.store import TableStore
-
     vecs = load(spark, sf_dir, "embeddings")
     work = tempfile.mkdtemp(prefix="sfdp_ivfx_")
     try:
@@ -1761,51 +1778,74 @@ def q_inverted_index(spark, sf_dir):
     return text.inverted_index(load(spark, sf_dir, "documents"))
 
 
-def _drain_documents_stream(spark, sf_dir, start_fn, log_table, prefix,
-                            table="documents"):
-    """Shared scaffold for the single-batch streaming-drain keys: point
-    ``start_fn`` (a start_stream_* factory) at the ``table`` parquet,
-    drain it as ONE deterministic micro-batch into a scratch
-    TableStore, pin the decision log into block-manager storage, and
-    delete the scratch dir. Single-file layouts stream the sf_dir with
-    a pathGlobFilter — without it every sibling table (lineitem,
-    orders, ...) is read with the stream's schema and floods the
-    pipeline with junk null rows (millions at sf1)."""
-    import shutil
-    import tempfile
+def _stream_source(table: str) -> tuple[str, str | None]:
+    """(directory, pathGlobFilter) a file stream reads the table at path
+    ``table`` through: a multi-file table is a directory and is streamed
+    as is; the single-FILE layout streams its parent dir with a glob on
+    the file name — without it every sibling table (lineitem, orders,
+    ...) is read with the stream's schema and floods the pipeline with
+    junk null rows (millions at sf1)."""
+    if os.path.isdir(table):
+        return table, None
+    return os.path.dirname(table), os.path.basename(table)
 
-    from streamforge_data_pipeline_spark.sources.store import TableStore
 
-    work = tempfile.mkdtemp(prefix=prefix)
-    store = TableStore(os.path.join(work, "store"))
-    table_path = os.path.join(sf_dir, f"{table}.parquet")
-    if os.path.isdir(table_path):
-        src, glob = table_path, None
-    else:
-        src, glob = sf_dir, f"{table}.parquet"
-    # In-batch shuffle partitioning tracks the drained input's bytes
-    # (r11, drain_conf docstring): every foreachBatch aggregation,
-    # join, checkpoint and store append otherwise runs core-count
-    # partitions over a micro-batch-sized relation — pure per-task
-    # fixed cost (measured: a 32-partition tiny append is ~2.5x a
-    # 1-partition one). No-op at production input sizes; the compute
-    # kernels stay wide via fan_out (keyed to defaultParallelism, not
-    # shuffle partitions).
-    with scaled_drain_conf(spark, table_path):
-        q = start_fn(
-            spark,
-            src,
-            store,
-            checkpoint_dir=os.path.join(work, "ckpt"),
-            max_files_per_trigger=10_000,  # one batch: deterministic + oracle-able
-            path_glob_filter=glob,
-        )
-        q.awaitTermination()
-    # pin the result into block-manager storage so the scratch dir can
-    # be deleted before returning (the caller collects lazily)
-    log = store.read(spark, log_table).localCheckpoint(eager=True)
-    shutil.rmtree(work, ignore_errors=True)
-    return log
+def _table_stream(spark, sf_dir, name):
+    """Raw file stream over the sf_dir table ``name``, with the schema
+    load() gives the batch read."""
+    src, glob = _stream_source(os.path.join(sf_dir, f"{name}.parquet"))
+    reader = spark.readStream.schema(load(spark, sf_dir, name).schema)
+    if glob:
+        reader = reader.option("pathGlobFilter", glob)
+    return reader.parquet(src)
+
+
+def _store_table(name: str):
+    """``read_fn`` for :func:`_drain` that reads one store table."""
+    return lambda spark, store: store.read(spark, name)
+
+
+def _drain(spark, start_fn, read_fn, *, src=None, table=None, stage=None,
+           **start_kwargs):
+    """The one scaffold of the bounded ``start_stream_*`` drain keys.
+
+    The drain reads one of: ``src``, a parquet directory; ``table``, a
+    table path (see :func:`_stream_source`; the glob goes to the start
+    function as ``path_glob_filter``); or ``stage``, a DataFrame first
+    written into the scratch dir. ``start_fn(spark, src, store,
+    checkpoint_dir=..., **start_kwargs)`` starts the query against a
+    scratch TableStore; ``max_files_per_trigger`` defaults to 10,000,
+    which drains the input as ONE deterministic, oracle-able
+    micro-batch. ``read_fn(spark, store)`` reads the result, pinned into
+    block-manager storage so the scratch dir can be deleted before
+    returning (the caller collects lazily). The scratch dir is deleted
+    whether or not the drain succeeds."""
+    work = tempfile.mkdtemp(prefix="sfdp_drain_")
+    try:
+        if stage is not None:
+            src = os.path.join(work, "src")
+            stage.write.mode("overwrite").parquet(src)
+        elif table is not None:
+            src, glob = _stream_source(table)
+            start_kwargs["path_glob_filter"] = glob
+        start_kwargs.setdefault("max_files_per_trigger", 10_000)
+        store = TableStore(os.path.join(work, "store"))
+        # In-batch shuffle partitioning tracks the drained input's bytes
+        # (r11, drain_conf docstring): every foreachBatch aggregation,
+        # join, checkpoint and store append otherwise runs core-count
+        # partitions over a micro-batch-sized relation — pure per-task
+        # fixed cost (measured: a 32-partition tiny append is ~2.5x a
+        # 1-partition one). No-op at production input sizes; the compute
+        # kernels stay wide via fan_out (keyed to defaultParallelism, not
+        # shuffle partitions).
+        with scaled_drain_conf(spark, table or src):
+            start_fn(
+                spark, src, store, checkpoint_dir=os.path.join(work, "ckpt"),
+                **start_kwargs,
+            ).awaitTermination()
+        return read_fn(spark, store).localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
 
 
 def q_stream_near_dedup(spark, sf_dir):
@@ -1821,8 +1861,9 @@ def q_stream_near_dedup(spark, sf_dir):
         start_stream_near_dedup,
     )
 
-    return _drain_documents_stream(
-        spark, sf_dir, start_stream_near_dedup, "near_dup_log", "sfdp_stream_nd_"
+    return _drain(
+        spark, start_stream_near_dedup, _store_table("near_dup_log"),
+        table=os.path.join(sf_dir, "documents.parquet"),
     )
 
 
@@ -1834,42 +1875,21 @@ def q_stream_running_totals(spark, sf_dir):
     total_value accumulates in pandas arrival order, which no
     engine-portable oracle can replay (covered instead by the
     stream==batch parity pytest)."""
-    df = load(spark, sf_dir, "events")
-    import uuid
-
     from streamforge_data_pipeline_spark.streaming.stateful import (
         running_user_totals,
     )
 
-    table_path = os.path.join(sf_dir, "events.parquet")
-    if os.path.isdir(table_path):
-        stream = spark.readStream.schema(df.schema).parquet(table_path)
-    else:
-        stream = (
-            spark.readStream.schema(df.schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-        )
     # nanos-parquet adapter: the raw stream reads ts as long; the
     # stateful op only touches value/event_id, so no rebuild needed
-    name = "stream_running_totals_" + uuid.uuid4().hex[:8]
-    with scaled_drain_conf(spark, table_path):
-        q = (
-            running_user_totals(stream)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return (
-        spark.table(name)
-        .groupBy("user_id")
-        .agg(
-            F.max("n_events").alias("n_events"),
-            F.max("last_event_id").alias("last_event_id"),
-        )
+    totals = drain_to_memory(
+        spark,
+        running_user_totals(_table_stream(spark, sf_dir, "events")),
+        "update",
+        os.path.join(sf_dir, "events.parquet"),
+    )
+    return totals.groupBy("user_id").agg(
+        F.max("n_events").alias("n_events"),
+        F.max("last_event_id").alias("last_event_id"),
     )
 
 
@@ -1887,13 +1907,9 @@ def q_stream_semantic_dedup(spark, sf_dir):
         start_stream_semantic_dedup,
     )
 
-    return _drain_documents_stream(
-        spark,
-        sf_dir,
-        start_stream_semantic_dedup,
-        "semantic_dup_log",
-        "sfdp_stream_sd_",
-        table="embeddings",
+    return _drain(
+        spark, start_stream_semantic_dedup, _store_table("semantic_dup_log"),
+        table=os.path.join(sf_dir, "embeddings.parquet"),
     )
 
 
@@ -1906,19 +1922,13 @@ def q_stream_semantic_dedup_trained(spark, sf_dir):
     argmax sibling carries the hash-checked oracle for the shared
     resolve/probe/commit machinery; the trained cells' semantics and
     scale behavior are pytest- and soak-asserted)."""
-    import functools
-
     from streamforge_data_pipeline_spark.streaming.semantic_dedup_stream import (
         start_stream_semantic_dedup,
     )
 
-    return _drain_documents_stream(
-        spark,
-        sf_dir,
-        functools.partial(start_stream_semantic_dedup, quantizer="trained"),
-        "semantic_dup_log",
-        "sfdp_stream_sdt_",
-        table="embeddings",
+    return _drain(
+        spark, start_stream_semantic_dedup, _store_table("semantic_dup_log"),
+        table=os.path.join(sf_dir, "embeddings.parquet"), quantizer="trained",
     )
 
 
@@ -1942,10 +1952,6 @@ def q_stream_semantic_dedup_trained_seeded(spark, sf_dir):
     k-means, rows-only); this twin hash-checks the trained path's
     seed-selection, sqrt(N) cell schedule, argmin assignment,
     within-cell resolution, and log commit against DuckDB."""
-    import shutil
-    import tempfile
-
-    from streamforge_data_pipeline_spark.sources.store import TableStore
     from streamforge_data_pipeline_spark.streaming.semantic_dedup_stream import (
         start_stream_semantic_dedup,
     )
@@ -1966,26 +1972,10 @@ def q_stream_semantic_dedup_trained_seeded(spark, sf_dir):
         lambda x: F.floor(x.cast("double") * scale + F.lit(0.5)).cast("float"),
     )
     qdf = with_mx.select("vec_id", qvec.alias("embedding"))
-
-    work = tempfile.mkdtemp(prefix="sfdp_stream_sdts_")
-    try:
-        src = os.path.join(work, "qvecs")
-        qdf.write.mode("overwrite").parquet(src)
-        store = TableStore(os.path.join(work, "store"))
-        with scaled_drain_conf(spark, src):
-            q = start_stream_semantic_dedup(
-                spark,
-                src,
-                store,
-                checkpoint_dir=os.path.join(work, "ckpt"),
-                max_files_per_trigger=10_000,  # one batch: deterministic
-                quantizer="trained",
-                train_iters=0,
-            )
-            q.awaitTermination()
-        return store.read(spark, "semantic_dup_log").localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    return _drain(
+        spark, start_stream_semantic_dedup, _store_table("semantic_dup_log"),
+        stage=qdf, quantizer="trained", train_iters=0,
+    )
 
 
 def q_interval_join_spread(spark, sf_dir):
@@ -2027,8 +2017,6 @@ def q_stream_session_window(spark, sf_dir):
     drain here keeps the answer oracle-exact. Inputs come from the
     shared _staged_events parquet (TIMESTAMP(NANOS) source, as for
     stream_interval_join)."""
-    import uuid
-
     from streamforge_data_pipeline_spark.operators.windows import session_counts
     from streamforge_data_pipeline_spark.streaming.event_time import watermarked
 
@@ -2039,18 +2027,7 @@ def q_stream_session_window(spark, sf_dir):
         "ts",
         "10 minutes",
     )
-    name = "stream_session_window_" + uuid.uuid4().hex[:8]
-    with scaled_drain_conf(spark, src):
-        q = (
-            session_counts(stream)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).localCheckpoint(eager=True)
+    return drain_to_memory(spark, session_counts(stream), "complete", src)
 
 
 def q_stream_scd2_merge(spark, sf_dir):
@@ -2062,9 +2039,6 @@ def q_stream_scd2_merge(spark, sf_dir):
     a no-op on one-update-per-key input), so the scd2_merge SQL oracle
     replays it exactly; cross-batch history semantics are
     pytest-asserted (tests/test_streaming_scd2.py)."""
-    import shutil
-    import tempfile
-
     from streamforge_data_pipeline_spark.streaming.scd2_stream import (
         read_current,
         seed_snapshot,
@@ -2088,33 +2062,29 @@ def q_stream_scd2_merge(spark, sf_dir):
         .alias("c_acctbal"),
         F.lit("2021-06-01").cast("timestamp").alias("eff_ts"),
     )
-    work = tempfile.mkdtemp(prefix="sfdp_sscd2_")
-    try:
-        store = os.path.join(work, "dim")
-        seed_snapshot(current, store)
-        src = os.path.join(work, "updates")
-        updates.write.mode("overwrite").parquet(src)
-        schema = spark.read.parquet(src).schema
-        with scaled_drain_conf(spark, src):
-            q = start_scd2_maintenance(
-                spark.readStream.schema(schema).parquet(src),
-                store_root=store,
-                checkpoint=os.path.join(work, "ckpt"),
-                key="c_custkey",
-                attrs=["c_mktsegment", "c_acctbal"],
-            )
-            q.awaitTermination()
-        out = (
-            read_current(spark, store)
-            .select(
-                "c_custkey", "c_mktsegment", "c_acctbal",
-                "valid_from", "valid_to", "is_current",
-            )
-            .localCheckpoint(eager=True)
+
+    # the versioned dimension lives at the drain store's root
+    def start(spark, src, store, checkpoint_dir, max_files_per_trigger):
+        seed_snapshot(current, store.root)
+        return start_scd2_maintenance(
+            spark.readStream.schema(spark.read.parquet(src).schema)
+            .option("maxFilesPerTrigger", max_files_per_trigger)
+            .parquet(src),
+            store_root=store.root,
+            checkpoint=checkpoint_dir,
+            key="c_custkey",
+            attrs=["c_mktsegment", "c_acctbal"],
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    return out
+
+    return _drain(
+        spark,
+        start,
+        lambda spark, store: read_current(spark, store.root).select(
+            "c_custkey", "c_mktsegment", "c_acctbal",
+            "valid_from", "valid_to", "is_current",
+        ),
+        stage=updates,
+    )
 
 
 def q_bottomk_sample(spark, sf_dir):
@@ -2247,56 +2217,32 @@ def q_domain_share(spark, sf_dir):
     )
 
 
-_DOC_URL_STAGE: dict[str, str] = {}
-
-
 def _staged_doc_urls(spark, sf_dir) -> str:
     """Session-lifetime (doc_id, url) parquet per sf_dir — the
     _staged_events discipline for the domain-keyed streaming keys."""
-    tag = os.path.abspath(sf_dir)
-    path = _DOC_URL_STAGE.get(tag)
-    if path and os.path.isdir(path):
-        return path
-    import atexit
-    import shutil
-    import tempfile
 
-    work = tempfile.mkdtemp(prefix="sfdp_urlstage_")
-    path = os.path.join(work, "doc_urls")
-    # fan_out (r11): single-file staging serialized every downstream
-    # batch/stream scan of this table (the _staged_events r10.14 fix)
-    fan_out(_with_urls(load(spark, sf_dir, "documents"))).write.mode(
-        "overwrite"
-    ).parquet(path)
-    _DOC_URL_STAGE[tag] = path
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-    return path
+    def write(path):
+        # fan_out (r11): single-file staging serialized every downstream
+        # batch/stream scan of this table (the _staged_events r10.14 fix)
+        fan_out(_with_urls(load(spark, sf_dir, "documents"))).write.mode(
+            "overwrite"
+        ).parquet(path)
 
-
-_DOC_TEXT_URL_STAGE: dict[str, str] = {}
+    return _stage_once(sf_dir, "doc_urls", write)
 
 
 def _staged_doc_text_urls(spark, sf_dir) -> str:
     """Session-lifetime (doc_id, text, url) parquet per sf_dir — the
     funnel stream's input staging."""
-    tag = os.path.abspath(sf_dir)
-    path = _DOC_TEXT_URL_STAGE.get(tag)
-    if path and os.path.isdir(path):
-        return path
-    import atexit
-    import shutil
-    import tempfile
 
-    work = tempfile.mkdtemp(prefix="sfdp_txturlstage_")
-    path = os.path.join(work, "doc_text_urls")
-    docs = load(spark, sf_dir, "documents")
-    # fan_out (r11): see _staged_doc_urls
-    fan_out(
-        _with_urls(docs).join(docs.select("doc_id", "text"), "doc_id")
-    ).select("doc_id", "text", "url").write.mode("overwrite").parquet(path)
-    _DOC_TEXT_URL_STAGE[tag] = path
-    atexit.register(shutil.rmtree, work, ignore_errors=True)
-    return path
+    def write(path):
+        docs = load(spark, sf_dir, "documents")
+        # fan_out (r11): see _staged_doc_urls
+        fan_out(
+            _with_urls(docs).join(docs.select("doc_id", "text"), "doc_id")
+        ).select("doc_id", "text", "url").write.mode("overwrite").parquet(path)
+
+    return _stage_once(sf_dir, "doc_text_urls", write)
 
 
 def q_stream_curation_funnel(spark, sf_dir):
@@ -2307,31 +2253,15 @@ def q_stream_curation_funnel(spark, sf_dir):
     row and shares its chained oracle. Cross-batch invariants
     (first-arrival dedup, never >k per domain, monotone stages) are
     pytest-asserted (tests/test_streaming_curation_funnel.py)."""
-    import shutil
-    import tempfile
-
-    from streamforge_data_pipeline_spark.sources.store import TableStore
     from streamforge_data_pipeline_spark.streaming.curation_funnel_stream import (
         read_funnel,
         start_stream_curation_funnel,
     )
 
-    src = _staged_doc_text_urls(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="sfdp_scf_")
-    try:
-        store = TableStore(os.path.join(work, "store"))
-        with scaled_drain_conf(spark, src):
-            q = start_stream_curation_funnel(
-                spark,
-                src,
-                store,
-                checkpoint_dir=os.path.join(work, "ckpt"),
-                max_files_per_trigger=10_000,  # one batch: deterministic
-            )
-            q.awaitTermination()
-        return read_funnel(spark, store).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    return _drain(
+        spark, start_stream_curation_funnel, read_funnel,
+        src=_staged_doc_text_urls(spark, sf_dir),
+    )
 
 
 def q_stream_domain_caps(spark, sf_dir):
@@ -2342,39 +2272,23 @@ def q_stream_domain_caps(spark, sf_dir):
     flag — which the SQL oracle replays. Cross-batch cap invariants
     (never more than k per domain, first-come admission) are
     pytest-asserted (tests/test_streaming_domain_caps.py)."""
-    import shutil
-    import tempfile
-
-    from streamforge_data_pipeline_spark.sources.store import TableStore
     from streamforge_data_pipeline_spark.streaming.domain_caps_stream import (
         LOG_TABLE,
         start_stream_domain_caps,
     )
 
-    src = _staged_doc_urls(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="sfdp_sdc_")
-    try:
-        store = TableStore(os.path.join(work, "store"))
-        with scaled_drain_conf(spark, src):
-            q = start_stream_domain_caps(
-                spark,
-                src,
-                store,
-                checkpoint_dir=os.path.join(work, "ckpt"),
-                schema="doc_id long, url string",
-                k=20,
-                max_files_per_trigger=10_000,  # one batch: deterministic
-            )
-            q.awaitTermination()
-        return (
-            store.read(spark, LOG_TABLE)
-            # batch_id is the journal partition key, not part of the
-            # decision contract the oracle replays
-            .select("doc_id", "domain", "rk", "admitted")
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    return _drain(
+        spark,
+        start_stream_domain_caps,
+        # batch_id is the journal partition key, not part of the
+        # decision contract the oracle replays
+        lambda spark, store: store.read(spark, LOG_TABLE).select(
+            "doc_id", "domain", "rk", "admitted"
+        ),
+        src=_staged_doc_urls(spark, sf_dir),
+        schema="doc_id long, url string",
+        k=20,
+    )
 
 
 def _column_stats_sql(table: str, cols: list[tuple[str, str]]) -> str:
@@ -2450,33 +2364,16 @@ def q_stream_decayed_counts(spark, sf_dir):
     re-weighting against the current max day, so advancing time never
     rewrites state); mergeable, so the drain equals the batch
     decayed_counts under any slicing — shares its oracle verbatim."""
-    import shutil
-    import tempfile
-
-    from streamforge_data_pipeline_spark.sources.store import TableStore
     from streamforge_data_pipeline_spark.streaming.domain_share_stream import (
         read_decayed_counts,
         start_stream_decayed_counts,
     )
 
     src = _staged_events(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
-    work = tempfile.mkdtemp(prefix="sfdp_sdecay_")
-    try:
-        store = TableStore(os.path.join(work, "store"))
-        with scaled_drain_conf(spark, src):
-            q = start_stream_decayed_counts(
-                spark,
-                src,
-                store,
-                checkpoint_dir=os.path.join(work, "ckpt"),
-                schema=schema,
-                max_files_per_trigger=10_000,
-            )
-            q.awaitTermination()
-        return read_decayed_counts(spark, store).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    return _drain(
+        spark, start_stream_decayed_counts, read_decayed_counts,
+        src=src, schema=spark.read.parquet(src).schema,
+    )
 
 
 def q_curation_funnel(spark, sf_dir):
@@ -2554,38 +2451,16 @@ def q_stream_shard_export(spark, sf_dir):
     journal. ALL manifest columns are additive (the checksum is a sum
     by construction), so the drained manifest equals the batch
     shard_manifest under any slicing — shares its oracle verbatim."""
-    import shutil
-    import tempfile
-
-    from streamforge_data_pipeline_spark.sources.store import TableStore
     from streamforge_data_pipeline_spark.streaming.shard_export_stream import (
         read_manifest,
         start_stream_shard_export,
     )
 
-    work = tempfile.mkdtemp(prefix="sfdp_sshx_")
-    try:
-        store = TableStore(os.path.join(work, "store"))
-        table_path = os.path.join(sf_dir, "documents.parquet")
-        if os.path.isdir(table_path):
-            src, glob = table_path, None
-        else:
-            src, glob = sf_dir, "documents.parquet"
-        with scaled_drain_conf(spark, table_path):
-            q = start_stream_shard_export(
-                spark,
-                src,
-                store,
-                checkpoint_dir=os.path.join(work, "ckpt"),
-                schema="doc_id long, text string",
-                n_shards=64,
-                max_files_per_trigger=10_000,
-                path_glob_filter=glob,
-            )
-            q.awaitTermination()
-        return read_manifest(spark, store).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    return _drain(
+        spark, start_stream_shard_export, read_manifest,
+        table=os.path.join(sf_dir, "documents.parquet"),
+        schema="doc_id long, text string", n_shards=64,
+    )
 
 
 def q_stream_eval_split(spark, sf_dir):
@@ -2595,37 +2470,16 @@ def q_stream_eval_split(spark, sf_dir):
     bottom-K sketch and assignments are monotone-demoting, so the
     drained view equals batch eval_split_assign under any slicing —
     shares its oracle verbatim."""
-    import shutil
-    import tempfile
-
-    from streamforge_data_pipeline_spark.sources.store import TableStore
     from streamforge_data_pipeline_spark.streaming.eval_split_stream import (
         read_assignments,
         start_stream_eval_split,
     )
 
-    work = tempfile.mkdtemp(prefix="sfdp_sevs_")
-    try:
-        store = TableStore(os.path.join(work, "store"))
-        table_path = os.path.join(sf_dir, "documents.parquet")
-        if os.path.isdir(table_path):
-            src, glob = table_path, None
-        else:
-            src, glob = sf_dir, "documents.parquet"
-        with scaled_drain_conf(spark, table_path):
-            q = start_stream_eval_split(
-                spark,
-                src,
-                store,
-                checkpoint_dir=os.path.join(work, "ckpt"),
-                schema="doc_id long, text string, lang string, source string, n_chars long",
-                max_files_per_trigger=10_000,
-                path_glob_filter=glob,
-            )
-            q.awaitTermination()
-        return read_assignments(spark, store).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    return _drain(
+        spark, start_stream_eval_split, read_assignments,
+        table=os.path.join(sf_dir, "documents.parquet"),
+        schema="doc_id long, text string, lang string, source string, n_chars long",
+    )
 
 
 def q_stream_sequence_pack(spark, sf_dir):
@@ -2635,40 +2489,19 @@ def q_stream_sequence_pack(spark, sf_dir):
     re-read, plans pinnable by batch high-water mark (E51's streaming
     twin, r10). A one-batch drain equals batch sequence_pack, so it
     shares its oracle verbatim."""
-    import shutil
-    import tempfile
-
-    from streamforge_data_pipeline_spark.sources.store import TableStore
     from streamforge_data_pipeline_spark.streaming.sequence_pack_stream import (
         read_pack_plan,
         start_stream_sequence_pack,
     )
 
-    work = tempfile.mkdtemp(prefix="sfdp_sspk_")
-    try:
-        store = TableStore(os.path.join(work, "store"))
-        table_path = os.path.join(sf_dir, "documents.parquet")
-        if os.path.isdir(table_path):
-            src, glob = table_path, None
-        else:
-            src, glob = sf_dir, "documents.parquet"
-        with scaled_drain_conf(spark, table_path):
-            q = start_stream_sequence_pack(
-                spark,
-                src,
-                store,
-                checkpoint_dir=os.path.join(work, "ckpt"),
-                schema="doc_id long, text string",
-                n_shards=16,
-                max_files_per_trigger=10_000,
-                path_glob_filter=glob,
-            )
-            q.awaitTermination()
-        return read_pack_plan(spark, store, ctx_len=128).localCheckpoint(
-            eager=True
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    return _drain(
+        spark,
+        start_stream_sequence_pack,
+        lambda spark, store: read_pack_plan(spark, store, ctx_len=128),
+        table=os.path.join(sf_dir, "documents.parquet"),
+        schema="doc_id long, text string",
+        n_shards=16,
+    )
 
 
 def q_stream_column_stats(spark, sf_dir):
@@ -2676,34 +2509,19 @@ def q_stream_column_stats(spark, sf_dir):
     (sums/min/max, presentation transforms deferred to read) + the
     exact-ndv value log (E49's streaming twin, r10) — equals batch
     column_stats under any slicing, shares its oracle verbatim."""
-    import shutil
-    import tempfile
-
-    from streamforge_data_pipeline_spark.sources.store import TableStore
     from streamforge_data_pipeline_spark.streaming.column_stats_stream import (
         read_column_stats,
         start_stream_column_stats,
     )
 
-    work = tempfile.mkdtemp(prefix="sfdp_scst_")
-    try:
-        store = TableStore(os.path.join(work, "store"))
-        with scaled_drain_conf(spark, _staged_events(spark, sf_dir)):
-            q = start_stream_column_stats(
-                spark,
-                _staged_events(spark, sf_dir),
-                store,
-                checkpoint_dir=os.path.join(work, "ckpt"),
-                schema=(
-                    "event_id long, ts timestamp_ntz, user_id long,"
-                    " event_type string, value double, props string"
-                ),
-                max_files_per_trigger=10_000,
-            )
-            q.awaitTermination()
-        return read_column_stats(spark, store).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    return _drain(
+        spark, start_stream_column_stats, read_column_stats,
+        src=_staged_events(spark, sf_dir),
+        schema=(
+            "event_id long, ts timestamp_ntz, user_id long,"
+            " event_type string, value double, props string"
+        ),
+    )
 
 
 def q_stream_domain_share(spark, sf_dir):
@@ -2714,32 +2532,15 @@ def q_stream_domain_share(spark, sf_dir):
     drained shares equal the batch domain_share under ANY batch slicing
     and the key shares its oracle verbatim (the mergeable-state
     argument of stream_bottomk_sample, simplest possible algebra)."""
-    import shutil
-    import tempfile
-
-    from streamforge_data_pipeline_spark.sources.store import TableStore
     from streamforge_data_pipeline_spark.streaming.domain_share_stream import (
         read_shares,
         start_stream_domain_share,
     )
 
-    src = _staged_doc_urls(spark, sf_dir)
-    work = tempfile.mkdtemp(prefix="sfdp_sdsh_")
-    try:
-        store = TableStore(os.path.join(work, "store"))
-        with scaled_drain_conf(spark, src):
-            q = start_stream_domain_share(
-                spark,
-                src,
-                store,
-                checkpoint_dir=os.path.join(work, "ckpt"),
-                schema="doc_id long, url string",
-                max_files_per_trigger=10_000,
-            )
-            q.awaitTermination()
-        return read_shares(spark, store).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    return _drain(
+        spark, start_stream_domain_share, read_shares,
+        src=_staged_doc_urls(spark, sf_dir), schema="doc_id long, url string",
+    )
 
 
 def q_stream_bottomk_sample(spark, sf_dir):
@@ -2750,43 +2551,23 @@ def q_stream_bottomk_sample(spark, sf_dir):
     drain shares the batch oracle, not just the one-batch drain;
     slicing invariance pytest-asserted). State is <= k rows on disk
     regardless of stream length."""
-    import shutil
-    import tempfile
-
-    from streamforge_data_pipeline_spark.sources.store import TableStore
     from streamforge_data_pipeline_spark.streaming.sample_stream import (
         read_sample,
         start_stream_bottomk_sample,
     )
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    work = tempfile.mkdtemp(prefix="sfdp_sbk_")
-    try:
-        src = os.path.join(work, "docs")
-        # stage as 4 files -> 4 micro-batches at ANY SF: the drain cost
-        # must measure the per-batch k-row merge, not a batch COUNT
-        # that scales with the input's partitioning (32 files at sf1mf
-        # made the drain pay 32x the fixed batch overhead); 4 batches
-        # still exercise the multi-batch merge the slicing-invariance
-        # pytest pins
-        docs.coalesce(4).write.mode("overwrite").parquet(src)
-        store = TableStore(os.path.join(work, "store"))
-        with scaled_drain_conf(spark, src):
-            q = start_stream_bottomk_sample(
-                spark,
-                src,
-                store,
-                os.path.join(work, "ckpt"),
-                schema=spark.read.parquet(src).schema,
-                id_col="doc_id",
-                k=100,
-                max_files_per_trigger=1,
-            )
-            q.awaitTermination()
-        out = read_sample(spark, store).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    return out
+    # stage as 4 files -> 4 micro-batches at ANY SF: the drain cost
+    # must measure the per-batch k-row merge, not a batch COUNT
+    # that scales with the input's partitioning (32 files at sf1mf
+    # made the drain pay 32x the fixed batch overhead); 4 batches
+    # still exercise the multi-batch merge the slicing-invariance
+    # pytest pins
+    return _drain(
+        spark, start_stream_bottomk_sample, read_sample,
+        stage=docs.coalesce(4), schema="doc_id long, text string",
+        id_col="doc_id", k=100, max_files_per_trigger=1,
+    )
 
 
 def q_stream_kmv_distinct(spark, sf_dir):
@@ -2796,38 +2577,22 @@ def q_stream_kmv_distinct(spark, sf_dir):
     mergeable, the streamed state's estimate equals the batch formula
     over the full corpus — so the estimator over an unbounded stream
     is itself hash-checked, state <= k rows forever."""
-    import shutil
-    import tempfile
-
-    from streamforge_data_pipeline_spark.sources.store import TableStore
     from streamforge_data_pipeline_spark.streaming.sample_stream import (
         distinct_estimate,
         start_stream_bottomk_sample,
     )
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    work = tempfile.mkdtemp(prefix="sfdp_skmv_")
-    try:
-        src = os.path.join(work, "docs")
-        docs.coalesce(4).write.mode("overwrite").parquet(src)
-        store = TableStore(os.path.join(work, "store"))
-        with scaled_drain_conf(spark, src):
-            q = start_stream_bottomk_sample(
-                spark,
-                src,
-                store,
-                os.path.join(work, "ckpt"),
-                schema=spark.read.parquet(src).schema,
-                id_col="doc_id",
-                k=100,
-            )
-            q.awaitTermination()
-        out = distinct_estimate(spark, store, k=100).localCheckpoint(
-            eager=True
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
-    return out
+    return _drain(
+        spark,
+        start_stream_bottomk_sample,
+        lambda spark, store: distinct_estimate(spark, store, k=100),
+        stage=docs.coalesce(4),
+        schema="doc_id long, text string",
+        id_col="doc_id",
+        k=100,
+        max_files_per_trigger=1,
+    )
 
 
 def q_stream_interval_join(spark, sf_dir):
@@ -2842,8 +2607,6 @@ def q_stream_interval_join(spark, sf_dir):
     Inputs come from the session-lifetime _staged_events parquet (the
     raw testdata carries TIMESTAMP(NANOS), which a file stream cannot
     watermark without the batch-side rebuild load() performs)."""
-    import uuid
-
     from streamforge_data_pipeline_spark.streaming.joins_stream import (
         interval_join,
     )
@@ -2866,17 +2629,7 @@ def q_stream_interval_join(spark, sf_dir):
         F.col("l.event_id").alias("err_id"),
         F.col("r.event_id").alias("purchase_id"),
     )
-    name = "stream_interval_join_" + uuid.uuid4().hex[:8]
-    with scaled_drain_conf(spark, src):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name).localCheckpoint(eager=True)
+    return drain_to_memory(spark, out, "append", src)
 
 
 def q_stream_simhash_dedup(spark, sf_dir):
@@ -2891,9 +2644,9 @@ def q_stream_simhash_dedup(spark, sf_dir):
         start_stream_simhash_dedup,
     )
 
-    return _drain_documents_stream(
-        spark, sf_dir, start_stream_simhash_dedup, "simhash_dup_log",
-        "sfdp_stream_sh_",
+    return _drain(
+        spark, start_stream_simhash_dedup, _store_table("simhash_dup_log"),
+        table=os.path.join(sf_dir, "documents.parquet"),
     )
 
 
@@ -2905,35 +2658,17 @@ def q_stream_decontaminate(spark, sf_dir):
     what the SQL oracle replays. Decisions are a pure function of
     (batch, static eval index), so multi-batch runs produce the same
     log rows batch by batch (pytest-asserted)."""
-    import shutil
-    import tempfile
-
     from streamforge_data_pipeline_spark.functions import hash60
-    from streamforge_data_pipeline_spark.sources.store import TableStore
     from streamforge_data_pipeline_spark.streaming.decontaminate_stream import (
         start_stream_decontaminate,
     )
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     is_train = hash60(F.col("doc_id").cast("string")) % 100 < 80
-    work = tempfile.mkdtemp(prefix="sfdp_sdec_")
-    try:
-        src = os.path.join(work, "train")
-        docs.filter(is_train).write.mode("overwrite").parquet(src)
-        store = TableStore(os.path.join(work, "store"))
-        with scaled_drain_conf(spark, src):
-            q = start_stream_decontaminate(
-                spark,
-                src,
-                store,
-                checkpoint_dir=os.path.join(work, "ckpt"),
-                eval_docs=docs.filter(~is_train),
-                max_files_per_trigger=10_000,  # one batch: deterministic
-            )
-            q.awaitTermination()
-        return store.read(spark, "decontam_log").localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    return _drain(
+        spark, start_stream_decontaminate, _store_table("decontam_log"),
+        stage=docs.filter(is_train), eval_docs=docs.filter(~is_train),
+    )
 
 
 def q_stream_heavy_hitters(spark, sf_dir):
@@ -2942,38 +2677,22 @@ def q_stream_heavy_hitters(spark, sf_dir):
     the summary holds EXACT counts and the top-20 equals the batch
     profiler — oracle-checked; the bounded-capacity multi-batch error
     bound is pytest-asserted (streaming/heavy_hitters_stream)."""
-    import shutil
-    import tempfile
-
-    from streamforge_data_pipeline_spark.sources.store import TableStore
     from streamforge_data_pipeline_spark.streaming.heavy_hitters_stream import (
         start_stream_heavy_hitters,
         top_k,
     )
 
-    ev = load(spark, sf_dir, "events").select("event_id", "user_id")
-    work = tempfile.mkdtemp(prefix="sfdp_shh_")
-    try:
-        src = os.path.join(work, "events")
-        ev.write.mode("overwrite").parquet(src)
-        store = TableStore(os.path.join(work, "store"))
-        with scaled_drain_conf(spark, src):
-            q = start_stream_heavy_hitters(
-                spark,
-                src,
-                store,
-                checkpoint_dir=os.path.join(work, "ckpt"),
-                schema="event_id long, user_id long",
-                key="user_id",
-                capacity=1 << 20,
-                max_files_per_trigger=10_000,  # one batch: exact counters
-            )
-            q.awaitTermination()
-        return top_k(spark, store, k=20).withColumn(
+    return _drain(
+        spark,
+        start_stream_heavy_hitters,
+        lambda spark, store: top_k(spark, store, k=20).withColumn(
             "n", F.col("n").cast("long")
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        ),
+        stage=load(spark, sf_dir, "events").select("event_id", "user_id"),
+        schema="event_id long, user_id long",
+        key="user_id",
+        capacity=1 << 20,  # above the key cardinality: exact counters
+    )
 
 
 def q_stream_interval_join_spread_outer(spark, sf_dir):
@@ -3056,35 +2775,14 @@ def q_stream_exact_dedup(spark, sf_dir):
     policy makes the annotation deterministic and SQL-expressible —
     which is what lets a custom STREAMING stateful operator carry a
     DuckDB oracle row at all."""
-    import uuid
-
     from streamforge_data_pipeline_spark.streaming.stateful import dedup_stream
 
-    df = load(spark, sf_dir, "documents")
-    name = "stream_exact_dedup_" + uuid.uuid4().hex[:8]
-    # file source wants a DIRECTORY: multi-file layouts store the
-    # table AS a directory (stream it directly); the driver's
-    # single-FILE layout needs the parent dir + a glob on the name
-    table_path = os.path.join(sf_dir, "documents.parquet")
-    if os.path.isdir(table_path):
-        stream = spark.readStream.schema(df.schema).parquet(table_path)
-    else:
-        stream = (
-            spark.readStream.schema(df.schema)
-            .option("pathGlobFilter", "documents.parquet")
-            .parquet(sf_dir)
-        )
-    with scaled_drain_conf(spark, table_path):
-        q = (
-            dedup_stream(stream)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return drain_to_memory(
+        spark,
+        dedup_stream(_table_stream(spark, sf_dir, "documents")),
+        "update",
+        os.path.join(sf_dir, "documents.parquet"),
+    )
 
 
 def q_stream_exact_dedup_jvm(spark, sf_dir):
@@ -3098,8 +2796,9 @@ def q_stream_exact_dedup_jvm(spark, sf_dir):
         start_stream_exact_dedup,
     )
 
-    return _drain_documents_stream(
-        spark, sf_dir, start_stream_exact_dedup, "exact_dedup_log", "sfdp_stream_xd_"
+    return _drain(
+        spark, start_stream_exact_dedup, _store_table("exact_dedup_log"),
+        table=os.path.join(sf_dir, "documents.parquet"),
     )
 
 

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from streamforge_data_pipeline_spark.sources.store import TableStore
+from streamforge_data_pipeline_spark.streaming.drain_conf import start_parquet_drain
 
 PARTIALS_TABLE = "column_stats_partials"
 VALUES_TABLE = "column_stats_values"
@@ -202,24 +203,15 @@ def start_stream_column_stats(
     checkpoint_dir: str,
     schema: str,
     max_files_per_trigger: int = 1,
-    available_now: bool = True,
     path_glob_filter: str | None = None,
 ) -> StreamingQuery:
     """Tail ``input_dir`` for parquet and maintain the ANALYZE table
     incrementally."""
-    reader = spark.readStream.schema(schema).option(
-        "maxFilesPerTrigger", max_files_per_trigger
-    )
-    if path_glob_filter:
-        reader = reader.option("pathGlobFilter", path_glob_filter)
-    stream = reader.parquet(input_dir)
 
     def commit(batch_df: DataFrame, batch_id: int) -> None:
         _commit_batch(batch_df, store, batch_id)
 
-    writer = stream.writeStream.foreachBatch(commit).option(
-        "checkpointLocation", checkpoint_dir
+    return start_parquet_drain(
+        spark, input_dir, schema, commit, checkpoint_dir,
+        max_files_per_trigger, path_glob_filter,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

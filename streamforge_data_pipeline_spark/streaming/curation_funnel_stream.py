@@ -47,6 +47,7 @@ from streamforge_data_pipeline_spark.functions import empty_df, hash60, local_ro
 from streamforge_data_pipeline_spark.operators.text import repetition_filter
 from streamforge_data_pipeline_spark.operators.web import normalized_host
 from streamforge_data_pipeline_spark.sources.store import TableStore
+from streamforge_data_pipeline_spark.streaming.drain_conf import start_parquet_drain
 
 SURVIVOR_LOG = "funnel_survivor_log"
 FUNNEL_JOURNAL = "funnel_journal"
@@ -222,15 +223,9 @@ def start_stream_curation_funnel(
     max_bigram_frac: float = 0.18,
     k_domain: int = 20,
     max_files_per_trigger: int = 1,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Tail ``input_dir`` for (id, text, url) parquet and run the
     composed funnel per micro-batch."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
 
     def commit(batch_df: DataFrame, batch_id: int) -> None:
         _commit_batch(
@@ -243,9 +238,7 @@ def start_stream_curation_funnel(
             k_domain=k_domain,
         )
 
-    writer = stream.writeStream.foreachBatch(commit).option(
-        "checkpointLocation", checkpoint_dir
+    return start_parquet_drain(
+        spark, input_dir, schema, commit, checkpoint_dir,
+        max_files_per_trigger,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

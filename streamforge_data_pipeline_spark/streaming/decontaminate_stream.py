@@ -47,6 +47,7 @@ from pyspark.sql.streaming import StreamingQuery
 from streamforge_data_pipeline_spark.functions import local_rows
 
 from streamforge_data_pipeline_spark.sources.store import TableStore
+from streamforge_data_pipeline_spark.streaming.drain_conf import start_parquet_drain
 
 
 def _ensure_eval_index(
@@ -158,7 +159,6 @@ def start_stream_decontaminate(
     log_table: str = "decontam_log",
     corpus_table: str = "train_corpus",
     max_files_per_trigger: int = 1,
-    available_now: bool = True,
     path_glob_filter: str | None = None,
 ) -> StreamingQuery:
     """Tail ``input_dir`` for parquet document files and run the
@@ -166,12 +166,6 @@ def start_stream_decontaminate(
     ``eval_docs`` held-out set."""
     eval_index_table = f"{log_table}__eval_shingles"
     _ensure_eval_index(spark, store, eval_docs, eval_index_table, id_col, text)
-    reader = spark.readStream.schema(f"{id_col} long, {text} string").option(
-        "maxFilesPerTrigger", max_files_per_trigger
-    )
-    if path_glob_filter is not None:
-        reader = reader.option("pathGlobFilter", path_glob_filter)
-    stream = reader.parquet(input_dir)
     run_id = os.path.abspath(checkpoint_dir)
 
     def commit(batch_df: DataFrame, batch_id: int) -> None:
@@ -188,9 +182,7 @@ def start_stream_decontaminate(
             run_id=run_id,
         )
 
-    writer = stream.writeStream.foreachBatch(commit).option(
-        "checkpointLocation", checkpoint_dir
+    return start_parquet_drain(
+        spark, input_dir, f"{id_col} long, {text} string", commit, checkpoint_dir,
+        max_files_per_trigger, path_glob_filter,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

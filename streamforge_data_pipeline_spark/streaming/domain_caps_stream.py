@@ -52,6 +52,7 @@ from pyspark.sql.streaming import StreamingQuery
 from streamforge_data_pipeline_spark.functions import empty_df, hash60
 from streamforge_data_pipeline_spark.operators.web import normalized_host
 from streamforge_data_pipeline_spark.sources.store import TableStore
+from streamforge_data_pipeline_spark.streaming.drain_conf import start_parquet_drain
 
 LOG_TABLE = "domain_cap_log"
 JOURNAL_TABLE = "domain_cap_journal"
@@ -158,17 +159,10 @@ def start_stream_domain_caps(
     id_col: str = "doc_id",
     url_col: str = "url",
     max_files_per_trigger: int = 1,
-    available_now: bool = True,
     path_glob_filter: str | None = None,
 ) -> StreamingQuery:
     """Tail ``input_dir`` for (id, url) parquet and run the capped
     admission per micro-batch."""
-    reader = spark.readStream.schema(schema).option(
-        "maxFilesPerTrigger", max_files_per_trigger
-    )
-    if path_glob_filter:
-        reader = reader.option("pathGlobFilter", path_glob_filter)
-    stream = reader.parquet(input_dir)
 
     def commit(batch_df: DataFrame, batch_id: int) -> None:
         _commit_batch(
@@ -181,9 +175,7 @@ def start_stream_domain_caps(
             batch_id=batch_id,
         )
 
-    writer = stream.writeStream.foreachBatch(commit).option(
-        "checkpointLocation", checkpoint_dir
+    return start_parquet_drain(
+        spark, input_dir, schema, commit, checkpoint_dir,
+        max_files_per_trigger, path_glob_filter,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -31,6 +31,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from streamforge_data_pipeline_spark.operators.web import normalized_host
 from streamforge_data_pipeline_spark.sources.store import TableStore
+from streamforge_data_pipeline_spark.streaming.drain_conf import start_parquet_drain
 
 JOURNAL_TABLE = "domain_share_journal"
 
@@ -73,27 +74,19 @@ def start_stream_domain_share(
     id_col: str = "doc_id",
     url_col: str = "url",
     max_files_per_trigger: int = 1,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Tail ``input_dir`` for (id, url) parquet and journal per-batch
     domain partials."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
 
     def commit(batch_df: DataFrame, batch_id: int) -> None:
         _commit_batch(
             batch_df.sparkSession, batch_df, store, id_col, url_col, batch_id
         )
 
-    writer = stream.writeStream.foreachBatch(commit).option(
-        "checkpointLocation", checkpoint_dir
+    return start_parquet_drain(
+        spark, input_dir, schema, commit, checkpoint_dir,
+        max_files_per_trigger,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_shares(spark: SparkSession, store: TableStore) -> DataFrame:
@@ -185,24 +178,16 @@ def start_stream_decayed_counts(
     key: str = "event_type",
     ts: str = "ts",
     max_files_per_trigger: int = 1,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Tail ``input_dir`` for event parquet and journal per-batch
     (key, day) count partials; decay is applied at read time."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
 
     def commit(batch_df: DataFrame, batch_id: int) -> None:
         _commit_decay_batch(
             batch_df.sparkSession, batch_df, store, key, ts, batch_id
         )
 
-    writer = stream.writeStream.foreachBatch(commit).option(
-        "checkpointLocation", checkpoint_dir
+    return start_parquet_drain(
+        spark, input_dir, schema, commit, checkpoint_dir,
+        max_files_per_trigger,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

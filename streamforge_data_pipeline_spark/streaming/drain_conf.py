@@ -1,4 +1,14 @@
-"""Scale-derived configuration for stateful streaming drains (r11).
+"""Scale-derived configuration for streaming drains (r11), and the one
+start path every parquet file-stream drain shares.
+
+``start_parquet_drain`` is the single reader/writer tail of the
+``start_stream_*`` drains: a schema'd parquet file stream (optionally
+scoped by ``pathGlobFilter``) into a ``foreachBatch`` commit, drained
+with the ``availableNow`` trigger. ``drain_to_memory`` is the matching
+path for drains whose output is a streaming DataFrame rather than a
+store: it runs the query into a memory sink under
+``scaled_drain_conf``, checkpoints the rows and drops the sink's temp
+view.
 
 A stateful streaming query (stream-stream join, watermarked dedup,
 ``applyInPandasWithState``, streaming session windows) LATCHES its
@@ -39,9 +49,13 @@ partition-count invariance round over round.
 from __future__ import annotations
 
 import os
+import uuid
 from contextlib import contextmanager
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import StructType
 
 # Bytes of drain input per state partition. State rows are a projection
 # of input rows, so input bytes bound state bytes; 64 MB/partition sits
@@ -110,7 +124,7 @@ def scaled_drain_conf(spark: SparkSession, *sources: "str | DataFrame",
     """Context for STARTING a stateful drain: derives the state
     partition count from the drain's input size (see module docstring)
     and disables the per-file checkpoint CHECKSUM companion writes for
-    the drain's EPHEMERAL checkpoint (the drain scaffolds create a
+    the drain's EPHEMERAL checkpoint (the registry drains create a
     fresh temp checkpoint dir and delete it minutes later — the
     checksum exists to catch long-lived checkpoint corruption on
     unreliable storage, and on Spark 4.1 each delta-file create awaits
@@ -137,3 +151,58 @@ def scaled_drain_conf(spark: SparkSession, *sources: "str | DataFrame",
             spark.conf.set(
                 "spark.sql.streaming.checkpoint.fileChecksum.enabled", old_ck
             )
+
+
+def start_parquet_drain(
+    spark: SparkSession,
+    input_dir: str,
+    schema: "str | StructType",
+    commit: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+    max_files_per_trigger: int,
+    path_glob_filter: str | None = None,
+) -> StreamingQuery:
+    """Tail ``input_dir`` for parquet files with ``schema`` and run
+    ``commit(batch_df, batch_id)`` per micro-batch, draining the files
+    present at start (``availableNow``). ``path_glob_filter`` scopes a
+    mixed-table directory to one table's files — without it every
+    sibling table is read with this schema as junk null rows."""
+    reader = spark.readStream.schema(schema).option(
+        "maxFilesPerTrigger", max_files_per_trigger
+    )
+    if path_glob_filter:
+        reader = reader.option("pathGlobFilter", path_glob_filter)
+    return (
+        reader.parquet(input_dir)
+        .writeStream.foreachBatch(commit)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def drain_to_memory(
+    spark: SparkSession,
+    stream: DataFrame,
+    output_mode: str,
+    *sources: "str | DataFrame",
+) -> DataFrame:
+    """Drain ``stream`` (``availableNow``) into a memory sink under
+    ``scaled_drain_conf(spark, *sources)`` and return its rows pinned
+    by an eager local checkpoint. The sink's temp view is dropped
+    before returning, also on failure: it would otherwise hold every
+    drained row in driver memory for the life of the session."""
+    name = "memory_drain_" + uuid.uuid4().hex[:8]
+    try:
+        with scaled_drain_conf(spark, *sources):
+            (
+                stream.writeStream.format("memory")
+                .queryName(name)
+                .outputMode(output_mode)
+                .trigger(availableNow=True)
+                .start()
+                .awaitTermination()
+            )
+        return spark.table(name).localCheckpoint(eager=True)
+    finally:
+        spark.catalog.dropTempView(name)

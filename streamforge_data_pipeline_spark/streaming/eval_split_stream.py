@@ -45,6 +45,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from streamforge_data_pipeline_spark.functions import hash60
 from streamforge_data_pipeline_spark.sources.store import TableStore
+from streamforge_data_pipeline_spark.streaming.drain_conf import start_parquet_drain
 
 CANDIDATES_TABLE = "eval_split_candidates"
 MEMBERS_TABLE = "eval_split_members"
@@ -141,26 +142,17 @@ def start_stream_eval_split(
     k_val: int = 50,
     k_test: int = 50,
     max_files_per_trigger: int = 1,
-    available_now: bool = True,
     path_glob_filter: str | None = None,
 ) -> StreamingQuery:
     """Tail ``input_dir`` for document parquet and maintain the
     train/val/test assignment incrementally."""
-    reader = spark.readStream.schema(schema).option(
-        "maxFilesPerTrigger", max_files_per_trigger
-    )
-    if path_glob_filter:
-        reader = reader.option("pathGlobFilter", path_glob_filter)
-    stream = reader.parquet(input_dir)
 
     def commit(batch_df: DataFrame, batch_id: int) -> None:
         _commit_batch(
             batch_df, store, stratum, id_col, k_val, k_test, batch_id
         )
 
-    writer = stream.writeStream.foreachBatch(commit).option(
-        "checkpointLocation", checkpoint_dir
+    return start_parquet_drain(
+        spark, input_dir, schema, commit, checkpoint_dir,
+        max_files_per_trigger, path_glob_filter,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -83,6 +83,7 @@ from pyspark.sql.streaming import StreamingQuery
 from streamforge_data_pipeline_spark.functions import local_rows
 
 from streamforge_data_pipeline_spark.sources.store import TableStore
+from streamforge_data_pipeline_spark.streaming.drain_conf import start_parquet_drain
 
 
 def _replay_guard_decision(
@@ -435,7 +436,6 @@ def start_stream_exact_dedup(
     index_table: str = "hash_index",
     log_table: str = "exact_dedup_log",
     max_files_per_trigger: int = 1,
-    available_now: bool = True,
     path_glob_filter: str | None = None,
     index_buckets: int | None | str = None,
     auto_migrate_bytes: int | None = None,
@@ -453,12 +453,6 @@ def start_stream_exact_dedup(
     r7 sf1 A/B that fixed this policy; per-batch probes additionally
     skip the IN-list whenever it would cover most of the buckets
     anyway."""
-    reader = spark.readStream.schema(f"{id_col} long, {text} string").option(
-        "maxFilesPerTrigger", max_files_per_trigger
-    )
-    if path_glob_filter is not None:
-        reader = reader.option("pathGlobFilter", path_glob_filter)
-    stream = reader.parquet(input_dir)
     # lineage identity for the replay-guard marker: the checkpoint dir
     # is stable across crash restarts of the same stream (batch ids
     # stay monotone and comparable) and differs for fresh
@@ -480,9 +474,7 @@ def start_stream_exact_dedup(
             auto_migrate_bytes=auto_migrate_bytes,
         )
 
-    writer = stream.writeStream.foreachBatch(commit).option(
-        "checkpointLocation", checkpoint_dir
+    return start_parquet_drain(
+        spark, input_dir, f"{id_col} long, {text} string", commit, checkpoint_dir,
+        max_files_per_trigger, path_glob_filter,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

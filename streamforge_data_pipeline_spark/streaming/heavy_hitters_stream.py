@@ -47,6 +47,7 @@ from pyspark.sql.streaming import StreamingQuery
 from streamforge_data_pipeline_spark.functions import local_rows
 
 from streamforge_data_pipeline_spark.sources.store import TableStore
+from streamforge_data_pipeline_spark.streaming.drain_conf import start_parquet_drain
 
 
 def _merge_batch(
@@ -106,18 +107,11 @@ def start_stream_heavy_hitters(
     summary_table: str = "hh_summary",
     capacity: int = 4096,
     max_files_per_trigger: int = 1,
-    available_now: bool = True,
     path_glob_filter: str | None = None,
 ) -> StreamingQuery:
     """Tail ``input_dir`` for parquet files and maintain the bounded
     Misra-Gries summary table per micro-batch. ``schema`` is the
     stream reader schema (file streams need one declared)."""
-    reader = spark.readStream.schema(schema).option(
-        "maxFilesPerTrigger", max_files_per_trigger
-    )
-    if path_glob_filter is not None:
-        reader = reader.option("pathGlobFilter", path_glob_filter)
-    stream = reader.parquet(input_dir)
 
     def commit(batch_df: DataFrame, _batch_id: int) -> None:
         _merge_batch(
@@ -125,12 +119,10 @@ def start_stream_heavy_hitters(
             capacity,
         )
 
-    writer = stream.writeStream.foreachBatch(commit).option(
-        "checkpointLocation", checkpoint_dir
+    return start_parquet_drain(
+        spark, input_dir, schema, commit, checkpoint_dir,
+        max_files_per_trigger, path_glob_filter,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def top_k(

@@ -31,7 +31,6 @@ def start_stream_ingest(
     checkpoint_dir: str,
     job_id: str,
     status: StatusStore | None = None,
-    available_now: bool = True,
 ) -> StreamingQuery:
     status = status or StatusStore()
     status.put(job_id, Status("INIT"))
@@ -69,14 +68,13 @@ def start_stream_ingest(
             Status("DB_COMMIT_SUCCESS", f"batch {batch_id}", processed["rows"]),
         )
 
-    writer = (
+    query = (
         raw.writeStream.foreachBatch(commit_batch)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    query = writer.start()
     # carries the running count: a batch may commit before start() returns
     status.put(job_id, Status("PROCESSING", str(query.id), processed["rows"]))
     return query

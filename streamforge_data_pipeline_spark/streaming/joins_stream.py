@@ -22,6 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .drain_conf import drain_to_memory
 from .event_time import as_event_time as _as_event_time
 
 
@@ -219,8 +220,6 @@ def drain_interval_join_spread(
     anti-join keys on the left/right row columns (row identity), and
     its probe side is the matched set — answer-sized, broadcastable.
     """
-    import uuid
-
     if how not in ("inner", "leftOuter", "rightOuter", "fullOuter"):
         raise ValueError(f"unknown join mode {how!r}")
     lcols = list(left_batch.columns)
@@ -231,24 +230,10 @@ def drain_interval_join_spread(
         left_stream, right_stream, key, left_ts, right_ts, lower, upper,
         delay, spread_seconds,
     ).toDF(*lcols, *rcols_out)
-    name = "spread_drain_" + uuid.uuid4().hex[:8]
-    from streamforge_data_pipeline_spark.streaming.drain_conf import (
-        scaled_drain_conf,
-    )
-
     # Stream-stream joins open FOUR state stores per partition; the
     # partition count must track input bytes, not cores (drain_conf
     # module docstring — r11, measured 2.7x inversion at 32 cores).
-    with scaled_drain_conf(spark, left_batch, right_batch):
-        q = (
-            inner_q.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    inner = spark.table(name).localCheckpoint(eager=True)
+    inner = drain_to_memory(spark, inner_q, "append", left_batch, right_batch)
     if how == "inner":
         return inner
     wm_row = (

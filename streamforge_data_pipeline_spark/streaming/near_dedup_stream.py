@@ -51,6 +51,7 @@ from streamforge_data_pipeline_spark.operators.minhash import (
     minhash_lsh_dedup,
 )
 from streamforge_data_pipeline_spark.sources.store import TableStore
+from streamforge_data_pipeline_spark.streaming.drain_conf import start_parquet_drain
 
 
 def _resolve_batch(
@@ -196,23 +197,14 @@ def start_stream_near_dedup(
     corpus_table: str = "corpus",
     log_table: str = "near_dup_log",
     max_files_per_trigger: int = 1,
-    available_now: bool = True,
     path_glob_filter: str | None = None,
 ) -> StreamingQuery:
     """Tail ``input_dir`` for parquet document files and run the
     resolve/probe/admit pipeline per micro-batch. Returns the running
-    query; with ``available_now`` it drains the present files and
-    stops (production would run untriggered against the bucket).
+    query, which drains the present files and stops.
     ``path_glob_filter`` scopes a mixed-table directory to the
     document files — without it every sibling table is read with the
     (doc_id, text) schema as junk null rows."""
-    reader = spark.readStream.schema("doc_id long, text string").option(
-        "maxFilesPerTrigger", max_files_per_trigger
-    )
-    if path_glob_filter is not None:
-        reader = reader.option("pathGlobFilter", path_glob_filter)
-    stream = reader.parquet(input_dir)
-
     # lineage identity for the replay-guard marker: the checkpoint dir
     # is stable across crash restarts of the same stream (batch ids
     # stay monotone and comparable) and differs for fresh
@@ -231,9 +223,7 @@ def start_stream_near_dedup(
             run_id=run_id,
         )
 
-    writer = stream.writeStream.foreachBatch(commit).option(
-        "checkpointLocation", checkpoint_dir
+    return start_parquet_drain(
+        spark, input_dir, "doc_id long, text string", commit, checkpoint_dir,
+        max_files_per_trigger, path_glob_filter,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

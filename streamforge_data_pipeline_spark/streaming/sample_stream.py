@@ -44,6 +44,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from streamforge_data_pipeline_spark.functions import hash60
 from streamforge_data_pipeline_spark.sources.store import TableStore
+from streamforge_data_pipeline_spark.streaming.drain_conf import start_parquet_drain
 
 
 def _merge_batch(
@@ -84,25 +85,17 @@ def start_stream_bottomk_sample(
     table: str = "bottomk_sample",
     k: int = 100,
     max_files_per_trigger: int = 1,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Tail ``input_dir`` for parquet files and maintain the k-row
     bottom-k sample table per micro-batch."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
 
     def commit(batch_df: DataFrame, _batch_id: int) -> None:
         _merge_batch(batch_df.sparkSession, batch_df, store, id_col, table, k)
 
-    writer = stream.writeStream.foreachBatch(commit).option(
-        "checkpointLocation", checkpoint_dir
+    return start_parquet_drain(
+        spark, input_dir, schema, commit, checkpoint_dir,
+        max_files_per_trigger,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_sample(

@@ -77,6 +77,7 @@ from streamforge_data_pipeline_spark.operators.similarity import (
     kmeans_centroids,
 )
 from streamforge_data_pipeline_spark.sources.store import TableStore
+from streamforge_data_pipeline_spark.streaming.drain_conf import start_parquet_drain
 
 N_CELLS = 8
 
@@ -381,15 +382,14 @@ def start_stream_semantic_dedup(
     corpus_table: str = "vec_corpus",
     log_table: str = "semantic_dup_log",
     max_files_per_trigger: int = 1,
-    available_now: bool = True,
     path_glob_filter: str | None = None,
     quantizer: str = "argmax",
     train_iters: int = 4,
 ) -> StreamingQuery:
     """Tail ``input_dir`` for parquet embedding files and run the
     resolve/probe/admit pipeline per micro-batch. Returns the running
-    query; with ``available_now`` it drains the present files and
-    stops. ``path_glob_filter`` scopes a mixed-table directory to the
+    query, which drains the present files and stops.
+    ``path_glob_filter`` scopes a mixed-table directory to the
     embedding files. ``quantizer``: 'argmax' (fixed 8 cells,
     oracle-checkable) or 'trained' (persisted sqrt(N)-scheduled k-means
     cells + cell-partitioned corpus — the unbounded-stream scale path;
@@ -399,13 +399,6 @@ def start_stream_semantic_dedup(
     which makes the whole trained pipeline SQL-replayable — the
     seeded-twin move registry key stream_semantic_dedup_trained_seeded
     uses for its DuckDB hash check."""
-    reader = spark.readStream.schema(
-        "vec_id long, embedding array<float>"
-    ).option("maxFilesPerTrigger", max_files_per_trigger)
-    if path_glob_filter is not None:
-        reader = reader.option("pathGlobFilter", path_glob_filter)
-    stream = reader.parquet(input_dir)
-
     run_id = os.path.abspath(checkpoint_dir)
 
     def commit(batch_df: DataFrame, batch_id: int) -> None:
@@ -422,9 +415,7 @@ def start_stream_semantic_dedup(
             train_iters=train_iters,
         )
 
-    writer = stream.writeStream.foreachBatch(commit).option(
-        "checkpointLocation", checkpoint_dir
+    return start_parquet_drain(
+        spark, input_dir, "vec_id long, embedding array<float>", commit, checkpoint_dir,
+        max_files_per_trigger, path_glob_filter,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -36,6 +36,7 @@ from streamforge_data_pipeline_spark.operators.sampling import (
     pack_plan,
 )
 from streamforge_data_pipeline_spark.sources.store import TableStore
+from streamforge_data_pipeline_spark.streaming.drain_conf import start_parquet_drain
 
 ACCT_TABLE = "sequence_pack_acct"
 
@@ -89,24 +90,15 @@ def start_stream_sequence_pack(
     id_col: str = "doc_id",
     text: str = "text",
     max_files_per_trigger: int = 1,
-    available_now: bool = True,
     path_glob_filter: str | None = None,
 ) -> StreamingQuery:
     """Tail ``input_dir`` for document parquet and maintain the pack
     accounting journal incrementally."""
-    reader = spark.readStream.schema(schema).option(
-        "maxFilesPerTrigger", max_files_per_trigger
-    )
-    if path_glob_filter:
-        reader = reader.option("pathGlobFilter", path_glob_filter)
-    stream = reader.parquet(input_dir)
 
     def commit(batch_df: DataFrame, batch_id: int) -> None:
         _commit_batch(batch_df, store, n_shards, id_col, text, batch_id)
 
-    writer = stream.writeStream.foreachBatch(commit).option(
-        "checkpointLocation", checkpoint_dir
+    return start_parquet_drain(
+        spark, input_dir, schema, commit, checkpoint_dir,
+        max_files_per_trigger, path_glob_filter,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -32,6 +32,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from streamforge_data_pipeline_spark.functions import hash60, tokens
 from streamforge_data_pipeline_spark.sources.store import TableStore
+from streamforge_data_pipeline_spark.streaming.drain_conf import start_parquet_drain
 
 JOURNAL_TABLE = "shard_manifest_journal"
 SHARDS_TABLE = "shards"
@@ -88,17 +89,10 @@ def start_stream_shard_export(
     id_col: str = "doc_id",
     text: str = "text",
     max_files_per_trigger: int = 1,
-    available_now: bool = True,
     path_glob_filter: str | None = None,
 ) -> StreamingQuery:
     """Tail ``input_dir`` for document parquet and export shards with
     an incrementally maintained manifest."""
-    reader = spark.readStream.schema(schema).option(
-        "maxFilesPerTrigger", max_files_per_trigger
-    )
-    if path_glob_filter:
-        reader = reader.option("pathGlobFilter", path_glob_filter)
-    stream = reader.parquet(input_dir)
 
     def commit(batch_df: DataFrame, batch_id: int) -> None:
         _commit_batch(
@@ -111,12 +105,10 @@ def start_stream_shard_export(
             batch_id,
         )
 
-    writer = stream.writeStream.foreachBatch(commit).option(
-        "checkpointLocation", checkpoint_dir
+    return start_parquet_drain(
+        spark, input_dir, schema, commit, checkpoint_dir,
+        max_files_per_trigger, path_glob_filter,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def read_manifest(spark: SparkSession, store: TableStore) -> DataFrame:

@@ -56,6 +56,7 @@ from streamforge_data_pipeline_spark.operators.dedup import (
     simhash_near_pairs,
 )
 from streamforge_data_pipeline_spark.sources.store import TableStore
+from streamforge_data_pipeline_spark.streaming.drain_conf import start_parquet_drain
 
 
 def _resolve_batch(
@@ -209,17 +210,10 @@ def start_stream_simhash_dedup(
     corpus_table: str = "simhash_index",
     log_table: str = "simhash_dup_log",
     max_files_per_trigger: int = 1,
-    available_now: bool = True,
     path_glob_filter: str | None = None,
 ) -> StreamingQuery:
     """Tail ``input_dir`` for parquet document files and run the
     fingerprint/resolve/probe/admit pipeline per micro-batch."""
-    reader = spark.readStream.schema("doc_id long, text string").option(
-        "maxFilesPerTrigger", max_files_per_trigger
-    )
-    if path_glob_filter is not None:
-        reader = reader.option("pathGlobFilter", path_glob_filter)
-    stream = reader.parquet(input_dir)
     run_id = os.path.abspath(checkpoint_dir)
 
     def commit(batch_df: DataFrame, batch_id: int) -> None:
@@ -234,9 +228,7 @@ def start_stream_simhash_dedup(
             run_id=run_id,
         )
 
-    writer = stream.writeStream.foreachBatch(commit).option(
-        "checkpointLocation", checkpoint_dir
+    return start_parquet_drain(
+        spark, input_dir, "doc_id long, text string", commit, checkpoint_dir,
+        max_files_per_trigger, path_glob_filter,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -54,3 +54,21 @@ def test_shingle_entry_points_results_unchanged(spark):
             .agg(F.count(F.lit(1)).alias("c")).collect()
         )
         assert narrow_rows == wide_rows and narrow_rows
+
+
+def test_fan_out_unreadable_file_size_asks_the_scan(spark, tmp_path, monkeypatch):
+    """A file whose size cannot be read (a non-local URI) falls back to
+    the scan's partition count instead of assuming the scan is wide."""
+    import os
+
+    path = str(tmp_path / "docs")
+    _docs(spark).coalesce(1).write.parquet(path)
+    df = spark.read.parquet(path)
+    assert df.rdd.getNumPartitions() == 1
+
+    def no_size(_path):
+        raise OSError("size unknown")
+
+    monkeypatch.setattr(os.path, "getsize", no_size)
+    out = fan_out(df)
+    assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism

@@ -13,19 +13,35 @@ GC-managed lifetime), then unpersist every cached intermediate.
 localCheckpoint blocks are deliberately OUT of scope here: they never
 enter the cache manager, and they are freed when the result handle is
 dropped — the unbounded-creep failure mode is specific to persist().
+
+The same loop checks temp directories: a key must not leave an
+``sfdp_*`` scratch dir behind in ``tempfile.gettempdir()``. Stage-once
+inputs (prefix ``registry.STAGE_PREFIX``) are exempt: they are meant to
+live until interpreter exit.
 """
 
 from __future__ import annotations
 
+import os
+import tempfile
+
 import pytest
 
-from streamforge_data_pipeline_spark.registry import REGISTRY
+from streamforge_data_pipeline_spark.registry import REGISTRY, STAGE_PREFIX
 
 from tests.conftest import SF_SMALL
 
 
 def _cache_empty(spark) -> bool:
     return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def _scratch_dirs() -> set[str]:
+    return {
+        d
+        for d in os.listdir(tempfile.gettempdir())
+        if d.startswith("sfdp_") and not d.startswith(STAGE_PREFIX)
+    }
 
 
 def test_detector_actually_detects(spark):
@@ -43,7 +59,12 @@ def test_detector_actually_detects(spark):
 @pytest.mark.parametrize("key", sorted(REGISTRY))
 def test_no_cache_creep(spark, key):
     spark.catalog.clearCache()
+    dirs_before = _scratch_dirs()
     REGISTRY[key].fn(spark, SF_SMALL).count()
+    assert _scratch_dirs() <= dirs_before, (
+        f"registry key {key!r} left temp dirs "
+        f"{sorted(_scratch_dirs() - dirs_before)} behind"
+    )
     assert _cache_empty(spark), (
         f"registry key {key!r} left persisted DataFrames in the cache "
         "manager after running — release intermediates with "
