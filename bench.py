@@ -32,10 +32,10 @@ HEADLINE = [
     "region_sales",
     "exact_dedup",
     "near_dedup",
-    # allpairs_jaccard is benched in scripts/bench_allpairs_zipf.py on
-    # Zipf-vocabulary corpora (its target regime, 2.2-2.4x over naive);
-    # the 30-word bench corpus is its documented anti-regime (uniform
-    # df -> prefixes can't prune) and near_dedup covers that answer.
+    # allpairs_jaccard's Zipf-vocabulary A/B (its target regime, 2.2-2.4x
+    # over naive) is in PERF_NOTES "r4 addendum: new headline keys" and
+    # r5.2; the 30-word bench corpus is its documented anti-regime
+    # (uniform df -> prefixes can't prune) and near_dedup covers that.
     "minhash_lsh_dedup",
     "simhash",
     "topk_cosine",

@@ -46,11 +46,6 @@ def hash60_hi(col: Column | str) -> Column:
     return F.conv(F.substring(F.md5(c), 17, 15), 16, 10).cast("long")
 
 
-def sql_hash60_hi(expr: str) -> str:
-    """DuckDB SQL text of :func:`hash60_hi` over ``expr``."""
-    return f"CAST(concat('0x', substr(md5({expr}), 17, 15)) AS BIGINT)"
-
-
 def minhash_perm(h: Column, perm: Column) -> Column:
     """Universal-hash permutation for MinHash: ((2j+1)*(h%p) + (j*7919+12345)) % p.
 

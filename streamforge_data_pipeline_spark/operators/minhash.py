@@ -512,7 +512,9 @@ def shared_shingle_jaccard(
     return _shared_shingle_from_sh(shingles(df, id_col, text).persist(), tau)
 
 
-def _shared_counts(sh: DataFrame, salt: int | str | None = None) -> DataFrame:
+def _shared_counts(
+    sh: DataFrame, salt: tuple[int, int] | None = None
+) -> DataFrame:
     """(doc_a, doc_b, inter): shared-shingle count for every
     co-shingled doc pair (doc_a < doc_b) — THE inverted-index
     candidate join, single-sourced for every consumer
@@ -522,38 +524,16 @@ def _shared_counts(sh: DataFrame, salt: int | str | None = None) -> DataFrame:
     ``salt`` (r8 VERDICT #7 — the E23 profiler rule applied to
     shingle document frequencies): a hot shingle with df=d puts its
     whole C(d,2) pair explosion into ONE reducer of the self-join.
-    ``"auto"`` profiles the df distribution (one map-side-combined
-    agg: max_df, sum_df2) and, when one key's work exceeds ~2x a fair
-    partition share (max_df^2 > 2*sum_df2/P), splits HOT posting
-    lists over R = ceil(max_df^2 * P / sum_df2) salt buckets — the
-    probe side bucketed by a deterministic doc hash, the build side
-    replicated xR (the salted_join recipe, self-join form: each
-    unordered pair meets exactly once, in the LEFT doc's bucket).
-    Cold shingles join plain and the partial counts add in the final
-    pair aggregation, so output is bit-identical (pytest). Pass an
-    int to force R, None/"off" to keep the plain join."""
-    if salt == "auto":
-        # R must BOTH split the hottest key's work below a fair share
-        # AND be >> the partition count, or balls-into-bins variance
-        # re-concentrates buckets (measured: R=P=32 -> balance 4.0;
-        # R=16P -> ~1.3); the replication bound R <= mx/4 lives in
-        # _salt_from_profile
-        p = int(sh.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        salt = _salt_from_profile(_stage_profile(sh), p)
-    if isinstance(salt, int) and salt > 1:
-        # explicit R: derive the hot threshold from the df distribution
-        import math
-
-        s2_row = (
-            sh.groupBy("sh")
-            .agg(F.count(F.lit(1)).alias("__df"))
-            .agg(F.sum(F.col("__df") * F.col("__df")).alias("s2"))
-            .collect()[0]
-        )
-        p = int(sh.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-        salt = (salt, max(2, int(math.sqrt(float(s2_row["s2"] or 1) / p))))
-    # any int still here is <= 1 (R > 1 became a (R, df_hot) tuple)
-    if not salt or salt == "off" or isinstance(salt, int):
+    :func:`_salt_from_profile` reads the df distribution (max_df,
+    sum_df2) and, when one key's work exceeds ~2x a fair partition
+    share (max_df^2 > 2*sum_df2/P), returns (R, df_hot): HOT posting
+    lists (df > df_hot) split over R salt buckets — the probe side
+    bucketed by a deterministic doc hash, the build side replicated
+    xR (the salted_join recipe, self-join form: each unordered pair
+    meets exactly once, in the LEFT doc's bucket). Cold shingles join
+    plain and the partial counts add in the final pair aggregation,
+    so output is bit-identical (pytest). None keeps the plain join."""
+    if salt is None:
         return (
             sh.alias("a")
             .join(
@@ -599,7 +579,7 @@ def _shared_counts(sh: DataFrame, salt: int | str | None = None) -> DataFrame:
 def _pair_intersections(
     sh: DataFrame,
     sh_ev: DataFrame | None = None,
-    salt: int | str | None = None,
+    salt: tuple[int, int] | None = None,
 ) -> DataFrame:
     """(doc_a, doc_b, inter, na, nb) for every co-shingled doc pair
     (doc_a < doc_b) over a (persisted) distinct-shingle relation — the
@@ -758,7 +738,7 @@ def _auto_cap_from_profile(prof: dict, df_ratio: float = 0.01, floor: int = 20) 
 
 
 def _salt_from_profile(prof: dict, p: int) -> tuple[int, int] | None:
-    """_shared_counts' salt="auto" rule over a precomputed profile:
+    """_shared_counts' salt rule over a precomputed profile:
     (R, df_hot) when one key's pair block exceeds ~2x a fair
     partition share, else None."""
     import math
@@ -766,6 +746,10 @@ def _salt_from_profile(prof: dict, p: int) -> tuple[int, int] | None:
     mx, s2 = prof["mx"], prof["s2"]
     if not s2 or mx * mx <= 2 * s2 / p:
         return None
+    # R must BOTH split the hottest key's work below a fair share AND
+    # be >> the partition count, or balls-into-bins variance
+    # re-concentrates buckets (measured: R=P=32 -> balance 4.0;
+    # R=16P -> ~1.3); replication stays bounded by R <= mx/4
     r_need = min(4096, max(math.ceil(mx * mx * p / s2), 16 * p))
     if mx < 4 * r_need:
         return None
@@ -943,9 +927,7 @@ def _single_shingle_pairs(sh: DataFrame) -> DataFrame:
     )
 
 
-def _pair_blocked_jaccard_from_sh(
-    sh: DataFrame, tau: float, heavy_threshold: int = 512
-) -> DataFrame:
+def _pair_blocked_jaccard_from_sh(sh: DataFrame, tau: float) -> DataFrame:
     """Exact Jaccard >= tau via shingle-PAIR blocking — the saturated-
     vocabulary scheme (r9): candidates + exact intersections from
     :func:`_blocked_intersections` (C(inter,2) arithmetic), inter=1
@@ -956,9 +938,7 @@ def _pair_blocked_jaccard_from_sh(
     EVERY co-shingled pair (465M groups at sf2, measured) while this
     one carries only inter>=2 pairs (47M) — same output, ~10x less
     aggregation state once the vocabulary saturates."""
-    inter = _blocked_intersections(sh, heavy_threshold).unionByName(
-        _single_shingle_pairs(sh)
-    )
+    inter = _blocked_intersections(sh).unionByName(_single_shingle_pairs(sh))
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     j = (
         inter.join(
@@ -1454,9 +1434,7 @@ def winnow_overlap(df: DataFrame, id_col: str = "doc_id",
 def containment_pairs(df: DataFrame, id_col: str = "doc_id",
                       text: str = "text", tau: float = 0.8,
                       max_df: int | None | str = "auto",
-                      scheme: str = "auto",
-                      heavy_threshold: int = 512,
-                      salt: int | str | None = "auto") -> DataFrame:
+                      scheme: str = "auto") -> DataFrame:
     """Directional Jaccard-CONTAINMENT near-dup pairs: emit
     (doc_sub, doc_sup, containment) whenever c(A->B) = |A∩B| / |A|
     >= ``tau`` over token-3-gram sets — the subset-duplicate detector
@@ -1506,15 +1484,11 @@ def containment_pairs(df: DataFrame, id_col: str = "doc_id",
         raise ValueError("scheme='pair' requires tau > 0.5 + 1e-9")
     sh = shingles(df, id_col, text).persist()
     # ONE profile pass feeds all three runtime decisions (r9.11)
-    prof = (
-        _stage_profile(sh)
-        if "auto" in (max_df, scheme, salt)
-        else None
-    )
+    prof = _stage_profile(sh)
     if max_df == "auto":
         max_df = _auto_cap_from_profile(prof)
     sh_ev = drop_boilerplate_shingles(sh, max_df) if max_df else sh
-    if max_df and prof is not None:
+    if max_df:
         prof = _stage_profile(sh_ev)  # capped relation: re-profile
     if scheme == "auto":
         # the > 0.5 completeness bound carries the SAME 1e-9 slack as
@@ -1526,13 +1500,11 @@ def containment_pairs(df: DataFrame, id_col: str = "doc_id",
             if tau > 0.5 + 1e-9 and prof["s2"] > 6.0 * prof["n2"]
             else "inverted"
         )
-    if salt == "auto":
-        salt = _salt_from_profile(
-            prof,
-            int(sh.sparkSession.conf.get("spark.sql.shuffle.partitions")),
-        )
+    salt = _salt_from_profile(
+        prof, int(sh.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    )
     if scheme == "pair":
-        inter = _blocked_intersections(sh_ev, heavy_threshold).unionByName(
+        inter = _blocked_intersections(sh_ev).unionByName(
             _single_shingle_pairs(sh_ev)
         )
         sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
@@ -1630,8 +1602,6 @@ def fuzzy_dedup(
     char_n: int = 5,
     max_df: int | None | str = "auto",
     scheme: str = "auto",
-    heavy_threshold: int = 512,
-    salt: int | str | None = "auto",
 ) -> DataFrame:
     """CHARACTER-level near-dup pairs: Levenshtein edit distance over
     shared-shingle candidates; keep (doc_a, doc_b) with
@@ -1708,15 +1678,11 @@ def fuzzy_dedup(
         if blocking == "token"
         else char_shingles(df, id_col, text, n=char_n)
     ).persist()
-    prof = (
-        _stage_profile(sh)
-        if "auto" in (max_df, scheme, salt)
-        else None
-    )
+    prof = _stage_profile(sh)
     if max_df == "auto":
         max_df = _auto_cap_from_profile(prof)
     sh_ev = drop_boilerplate_shingles(sh, max_df) if max_df else sh
-    if max_df and prof is not None:
+    if max_df:
         prof = _stage_profile(sh_ev)  # capped relation: re-profile
     if scheme == "auto":
         scheme = (
@@ -1724,15 +1690,13 @@ def fuzzy_dedup(
             if min_shared >= 2 and prof["s2"] > 6.0 * prof["n2"]
             else "inverted"
         )
-    if salt == "auto":
-        salt = _salt_from_profile(
-            prof,
-            int(sh.sparkSession.conf.get("spark.sql.shuffle.partitions")),
-        )
+    salt = _salt_from_profile(
+        prof, int(sh.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    )
     if scheme == "pair" and min_shared < 2:
         raise ValueError("scheme='pair' requires min_shared >= 2")
     cand = (
-        _blocked_intersections(sh_ev, heavy_threshold)
+        _blocked_intersections(sh_ev)
         if scheme == "pair"
         else _shared_counts(sh_ev, salt=salt)
     ).filter(F.col("inter") >= min_shared)

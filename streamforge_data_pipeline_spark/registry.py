@@ -533,16 +533,13 @@ def q_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate in Spark. The oracle states the identical relational
     query over the parquet twin — a value-hash match proves the JDBC
     sink+source round-trip is lossless (bigints, strings, IEEE
-    doubles). DB path is process-keyed: embedded Derby allows one JVM
-    per database directory."""
-    import os as _os
-
+    doubles). The database lives in a per-process _stage_once dir
+    (embedded Derby allows one JVM per database directory); every call
+    rewrites and re-reads it."""
     from streamforge_data_pipeline_spark.sources.jdbc_store import JdbcTableStore
 
-    tag = sf_dir.strip("/").replace("/", "_")
-    store = JdbcTableStore(
-        f"jdbc:derby:/tmp/streamforge_spark/jdbc/{tag}_{_os.getpid()};create=true"
-    )
+    db_dir = _stage_once(sf_dir, "jdbc", os.makedirs)
+    store = JdbcTableStore(f"jdbc:derby:{db_dir}/derby;create=true")
     ev = (
         load(spark, sf_dir, "events")
         .filter(F.col("event_id") % 20 == 0)

@@ -209,11 +209,6 @@ def _mix(ids: np.ndarray, tag: int) -> np.ndarray:
     return _splitmix64(ids.astype(np.uint64) ^ np.uint64(tag * 0x9E3779B9 + SEED))
 
 
-def _mix_f(ids: np.ndarray, tag: int) -> np.ndarray:
-    """Uniform float64 in [0,1), one per id."""
-    return (_mix(ids, tag) >> np.uint64(11)).astype(np.float64) / float(1 << 53)
-
-
 DOC_SCHEMA = "doc_id bigint, text string, lang string, source string, n_chars bigint"
 EMB_SCHEMA = "vec_id bigint, embedding array<float>, label int"
 

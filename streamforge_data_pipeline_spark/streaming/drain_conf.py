@@ -105,22 +105,18 @@ def input_bytes(*sources: "str | DataFrame") -> int:
     return total
 
 
-def derive_partitions(
-    spark: SparkSession,
-    nbytes: int,
-    target_bytes: int = TARGET_BYTES_PER_PARTITION,
-) -> int:
-    """ceil(bytes/target), clamped to [1, session shuffle partitions].
-    0 bytes (unknown input) keeps the session value."""
+def derive_partitions(spark: SparkSession, nbytes: int) -> int:
+    """ceil(bytes/TARGET_BYTES_PER_PARTITION), clamped to [1, session
+    shuffle partitions]. 0 bytes (unknown input) keeps the session
+    value."""
     current = int(spark.conf.get("spark.sql.shuffle.partitions"))
     if nbytes <= 0:
         return current
-    return max(1, min(current, -(-nbytes // target_bytes)))
+    return max(1, min(current, -(-nbytes // TARGET_BYTES_PER_PARTITION)))
 
 
 @contextmanager
-def scaled_drain_conf(spark: SparkSession, *sources: "str | DataFrame",
-                      target_bytes: int = TARGET_BYTES_PER_PARTITION):
+def scaled_drain_conf(spark: SparkSession, *sources: "str | DataFrame"):
     """Context for STARTING a stateful drain: derives the state
     partition count from the drain's input size (see module docstring)
     and disables the per-file checkpoint CHECKSUM companion writes for
@@ -134,7 +130,7 @@ def scaled_drain_conf(spark: SparkSession, *sources: "str | DataFrame",
     start. Long-lived production checkpoints go through the
     ``start_stream_*`` APIs directly and keep their session's settings.
     """
-    n = derive_partitions(spark, input_bytes(*sources), target_bytes)
+    n = derive_partitions(spark, input_bytes(*sources))
     old_parts = spark.conf.get("spark.sql.shuffle.partitions")
     old_ck = spark.conf.get(
         "spark.sql.streaming.checkpoint.fileChecksum.enabled", None

@@ -83,7 +83,10 @@ from pyspark.sql.streaming import StreamingQuery
 from streamforge_data_pipeline_spark.functions import local_rows
 
 from streamforge_data_pipeline_spark.sources.store import TableStore
-from streamforge_data_pipeline_spark.streaming.drain_conf import start_parquet_drain
+from streamforge_data_pipeline_spark.streaming.drain_conf import (
+    local_bytes,
+    start_parquet_drain,
+)
 
 
 def _replay_guard_decision(
@@ -137,7 +140,7 @@ def _replay_guard_decision(
 
 
 # auto-layout regime constants (r6 brief #5). The r7 sf1 A/B
-# (PERF_NOTES r7.8, scripts/ab_auto_index_layout.py) settled the
+# (PERF_NOTES r7.8, "auto index layout") settled the
 # decision variable: it is NOT the batch's shape but the INDEX'S
 # MEASURED SIZE. At small index sizes the flat probe is nearly free
 # while a bucketed append touches ~k directories of small files per
@@ -153,17 +156,6 @@ def _replay_guard_decision(
 AUTO_BULK_K = 512
 AUTO_MIN_BUCKETS_LOG2, AUTO_MAX_BUCKETS_LOG2 = 6, 12
 AUTO_MIGRATE_BYTES = 4 << 30  # 4 GiB: ~seconds of flat scan per probe
-
-
-def _dir_bytes(path: str) -> int:
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        for f in files:
-            try:
-                total += os.path.getsize(os.path.join(root, f))
-            except OSError:
-                pass
-    return total
 
 
 def _auto_index_buckets(
@@ -207,7 +199,7 @@ def _auto_index_buckets(
     if b:
         return b
     threshold = AUTO_MIGRATE_BYTES if migrate_bytes is None else migrate_bytes
-    if _dir_bytes(store.path(index_table)) < threshold:
+    if local_bytes(store.path(index_table)) < threshold:
         return None
     k = (
         batch_df.select(F.sha2(F.col(text).cast("binary"), 256))

@@ -48,7 +48,7 @@ Two quantizers (the ``quantizer`` knob):
   The trained path is iterative (k-means), hence rows-only at the
   driver (registry key ``stream_semantic_dedup_trained``); its
   semantics are pytest-asserted against the same postconditions and
-  its scale behavior A/B-measured in scripts/soak_semantic_dedup_sf1.
+  its scale behavior A/B-measured at sf1 (PERF_NOTES r5.10 and r6.1).
 
 Contrast with near_dedup_stream (the token/MinHash twin): same
 log-first commit order, same marker-gated replay guard, same

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from streamforge_data_pipeline_spark.operators.minhash import (
     _blocked_intersections,
+    _shared_counts,
     _single_shingle_pairs,
     auto_boilerplate_max_df,
     containment_lsh_pairs,
@@ -87,6 +88,23 @@ def test_blocked_intersections_exact(spark, heavy_threshold):
         if v >= 2
     }
     assert got == want
+
+
+@pytest.mark.parametrize("salt", [(8, 1), (4, 2)])
+def test_shared_counts_salt_split_is_exact(spark, salt):
+    """The hot-key salt split counts every co-shingled pair exactly
+    once: (R, df_hot) = (8, 1) sends every shared shingle through the
+    salted join; (4, 2) mixes hot and cold shingles."""
+    docs = _adversarial_docs(spark)
+    sh = shingles(docs).persist()
+    got = {
+        (r["doc_a"], r["doc_b"]): r["inter"]
+        for r in _shared_counts(sh, salt).collect()
+    }
+    sh.unpersist()
+    assert got == _brute_intersections(
+        [(r["doc_id"], r["text"]) for r in docs.collect()]
+    )
 
 
 def test_single_shingle_pairs_cover_inter1(spark):

@@ -5,9 +5,15 @@ Spark — and the full ingest pipeline executes against it unchanged."""
 
 from __future__ import annotations
 
+import os
+import tempfile
+
 import pytest
 
+from streamforge_data_pipeline_spark import registry
 from streamforge_data_pipeline_spark.sources.jdbc_store import JdbcTableStore
+
+from tests.conftest import SF_SMALL
 
 
 @pytest.fixture
@@ -92,3 +98,26 @@ def test_full_ingest_pipeline_against_jdbc(spark, store, tmp_path):
     res2 = run_upload(spark, str(csv), store)
     assert res2.inserted == 0
     assert res2.error_counts["duplicate externalId"] == 3
+
+
+def test_jdbc_roundtrip_key_keeps_its_database_in_a_stage_dir(spark, monkeypatch):
+    """The ``jdbc_roundtrip`` key writes and reads its Derby database on
+    every call, inside a per-process ``_stage_once`` dir that is removed
+    at exit, never under the old fixed ``streamforge_spark/jdbc`` dir."""
+    legacy = "/tmp/streamforge_spark/jdbc"  # the fixed path it used to write
+
+    def legacy_entries():
+        return sorted(os.listdir(legacy)) if os.path.isdir(legacy) else []
+
+    before = legacy_entries()
+    monkeypatch.setattr(registry, "_STAGED", {})
+    fn = registry.REGISTRY["jdbc_roundtrip"].fn
+    first = sorted(map(tuple, fn(spark, SF_SMALL).collect()))
+    second = sorted(map(tuple, fn(spark, SF_SMALL).collect()))
+    assert first and first == second
+    db_dir = registry._STAGED[(os.path.abspath(SF_SMALL), "jdbc")]
+    work = os.path.dirname(db_dir)
+    assert os.path.dirname(work) == tempfile.gettempdir()
+    assert os.path.basename(work).startswith(registry.STAGE_PREFIX)
+    assert os.path.isdir(os.path.join(db_dir, "derby"))
+    assert legacy_entries() == before
